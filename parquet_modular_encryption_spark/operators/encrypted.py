@@ -14,7 +14,6 @@ module is imported by the registry unconditionally, so keep imports cheap.
 
 from __future__ import annotations
 
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,17 +22,11 @@ from parquet_modular_encryption_spark.registry import register
 from parquet_modular_encryption_spark.scratch import scratch_dir
 from parquet_modular_encryption_spark.session import prep
 from parquet_modular_encryption_spark.sources.datasets import load
-
-
-def _native_pme_available(spark: SparkSession) -> bool:
-    """True when the compiled pmespark.RestKmsClient is on the JVM
-    classpath (bench/our sessions add it at launch; the driver's vanilla
-    session won't have it and falls back to the Arrow path)."""
-    try:
-        spark._jvm.java.lang.Class.forName("pmespark.RestKmsClient")
-        return True
-    except Exception:  # noqa: BLE001
-        return False
+from parquet_modular_encryption_spark.sources.encrypted_native import (
+    decrypting_scan,
+    native_pme_available,
+    write_encrypted_native,
+)
 
 
 @register(
@@ -54,7 +47,8 @@ def q60_encrypted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Backend-swapped: the JVM-native PME path (Spark's own parquet sink and
     vectorized reader, ~zero overhead) when the kms jar is on the
-    classpath, else the Arrow per-partition path — same API, same result."""
+    executor classpath (``native_pme_available``), else the Arrow
+    per-partition path — same API, same result."""
     prep(spark)
     from parquet_modular_encryption_spark.crypto.policy import CUSTOMER_POLICY
 
@@ -71,26 +65,15 @@ def q60_encrypted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             davg("c_acctbal").alias("avg_acctbal"),
         )
 
-    if _native_pme_available(spark):
+    if native_pme_available(spark)[0]:
         from parquet_modular_encryption_spark.crypto.kms_server import shared_kms_url
-        from parquet_modular_encryption_spark.sources.encrypted_native import (
-            decrypting_scan,
-            write_encrypted_native,
-        )
 
         kms_url = shared_kms_url()
         write_encrypted_native(plain, path, CUSTOMER_POLICY, kms_url)
-        # Lazy scoped scan — nothing is persisted, so no decrypted copy is
-        # registered in the session CacheManager (a q60 run used to pin one
-        # permanently). The aggregate is materialized INSIDE the conf
-        # scope; its output is bounded (one row per market segment at any
-        # scale — the scan itself stays fully distributed), so re-creating
-        # it as a local frame is the conf-independent result the driver
-        # can collect later.
+        # Lazy scan — nothing is persisted, so no decrypted copy is
+        # registered in the session CacheManager.
         with decrypting_scan(spark, path, kms_url, "RESTRICTED") as enc:
-            agg = _agg(enc)
-            rows, schema = agg.collect(), agg.schema
-        return spark.createDataFrame(rows, schema)
+            return _agg(enc)
     from parquet_modular_encryption_spark.sources.encrypted import (
         read_encrypted,
         write_encrypted,
@@ -144,7 +127,7 @@ def q60b_encrypted_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain = load(spark, sf_dir, "customer").withColumn(
         "nation_bucket", (F.col("c_nationkey") % 5).cast("int")
     ).coalesce(4)
-    native = _native_pme_available(spark)
+    native = native_pme_available(spark)[0]
     memo_key = (
         spark.sparkContext.applicationId,
         f"q60b:{sf_dir}:{'native' if native else 'arrow'}",
@@ -166,10 +149,6 @@ def q60b_encrypted_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     if native:
         from parquet_modular_encryption_spark.crypto.kms_server import shared_kms_url
-        from parquet_modular_encryption_spark.sources.encrypted_native import (
-            decrypting_scan,
-            write_encrypted_native,
-        )
 
         kms_url = shared_kms_url()
         if fresh:
@@ -177,9 +156,7 @@ def q60b_encrypted_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
                 plain, path, CUSTOMER_POLICY, kms_url, partition_by=["nation_bucket"]
             )
         with decrypting_scan(spark, path, kms_url, "RESTRICTED") as enc:
-            agg = _agg(enc.filter(F.col("nation_bucket") == 2))
-            rows, schema = agg.collect(), agg.schema
-        return spark.createDataFrame(rows, schema)
+            return _agg(enc.filter(F.col("nation_bucket") == 2))
     from parquet_modular_encryption_spark.sources.encrypted import (
         read_encrypted,
         write_encrypted_partitioned,

@@ -13,7 +13,14 @@ Requirements: build/pme-kms.jar on the driver classpath at JVM launch —
 ``native_session_conf()`` returns the confs; scripts/build_kms_jar.sh
 builds the jar against pyspark's bundled parquet jars.
 
-Hadoop conf mapping mirrors the reference's EncryptionConfiguration
+PME settings travel as options on each read/write relation — the twin of
+the reference passing ``encryption_config`` / ``decryption_config`` per
+call (write_encrypted_parquet.py:21-28, read_encrypted_parquet.py:28-39).
+Spark merges a relation's options into the hadoop conf of that relation's
+jobs only, so the session-global hadoop conf never carries crypto keys:
+concurrent encrypted and plain I/O on other driver threads stay apart,
+and a lazy decrypting frame keeps its token for as long as it lives. The
+option mapping mirrors the reference's EncryptionConfiguration
 (write_encrypted_parquet.py:73-87 → SURVEY.md §2A rows 9-16).
 """
 
@@ -80,28 +87,6 @@ def native_pme_available(spark: SparkSession) -> tuple[bool, str]:
     return False, f"{os.path.basename(JAR_PATH)} not on spark.jars/extraClassPath"
 
 
-@contextmanager
-def _pme_hadoop_conf(spark: SparkSession, entries: dict[str, str]):
-    """Temporarily set PME keys on the (session-global) hadoop conf.
-
-    The hadoop Configuration is shared by every read/write in the session,
-    so encryption settings are scoped tightly: set → operate → unset, or a
-    later unrelated `df.write.parquet` would silently encrypt too.
-    """
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    previous = {k: conf.get(k) for k in entries}
-    for k, v in entries.items():
-        conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, old in previous.items():
-            if old is None:
-                conf.unset(k)
-            else:
-                conf.set(k, old)
-
-
 def _common_conf(kms_url: str, token: str | None) -> dict[str, str]:
     return {
         "parquet.crypto.factory.class": FACTORY,
@@ -110,6 +95,17 @@ def _common_conf(kms_url: str, token: str | None) -> dict[str, str]:
         "parquet.encryption.key.access.token": token or "DEFAULT",
         "parquet.encryption.cache.lifetime.seconds": "60",
     }
+
+
+def _decrypting_frame(
+    spark: SparkSession,
+    path: str,
+    kms_url: str,
+    token: str | None,
+    columns: list[str] | None,
+) -> DataFrame:
+    df = spark.read.options(**_common_conf(kms_url, token)).parquet(path)
+    return df.select(*columns) if columns else df
 
 
 def write_encrypted_native(
@@ -130,7 +126,8 @@ def write_encrypted_native(
 
     Writer config matches the reference exactly: zstd at level 19 and
     DataPage v2 (reference write_encrypted_parquet.py:23-25), via the
-    parquet-mr hadoop conf twins of the Arrow writer kwargs.
+    parquet-mr conf twins of the Arrow writer kwargs, passed as writer
+    options (``extra_conf`` adds more).
 
     Pass ``data_page_version="1.0"`` for files that Arrow/parquet-cpp
     readers must decrypt: v2-page encryption is not cross-readable between
@@ -166,7 +163,6 @@ def write_encrypted_native(
     with uniform mode (see :func:`write_encrypted_uniform_native`)."""
     from parquet_modular_encryption_spark.sources.encrypted import _check_algorithm
 
-    spark = df.sparkSession
     entries = _common_conf(kms_url, None) | {
         "parquet.encryption.column.keys": policy.spark_column_keys(),
         "parquet.encryption.footer.key": policy.footer_key,
@@ -182,17 +178,16 @@ def write_encrypted_native(
             "PARQUET_2_0" if data_page_version == "2.0" else "PARQUET_1_0"
         ),
     } | (extra_conf or {})
-    with _pme_hadoop_conf(spark, entries):
-        writer = df.write.mode(mode).option("compression", compression)
-        if partition_by:
-            # Hive-partitioned encrypted dataset: every leaf file is PME-
-            # encrypted while the partition directory names stay plaintext
-            # (they are pathnames, not column chunks — partition keys must
-            # be non-sensitive). A filtered decrypting scan then prunes
-            # partitions BEFORE any KMS/decrypt work: at 100 TB a
-            # date-partitioned read touches only the matching days' files.
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+    writer = df.write.mode(mode).options(**entries).option("compression", compression)
+    if partition_by:
+        # Hive-partitioned encrypted dataset: every leaf file is PME-
+        # encrypted while the partition directory names stay plaintext
+        # (they are pathnames, not column chunks — partition keys must
+        # be non-sensitive). A filtered decrypting scan then prunes
+        # partitions BEFORE any KMS/decrypt work: at 100 TB a
+        # date-partitioned read touches only the matching days' files.
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
 
 
 def write_encrypted_uniform_native(
@@ -217,15 +212,13 @@ def write_encrypted_uniform_native(
     cheapest KMS load profile at 100 TB file counts."""
     from parquet_modular_encryption_spark.sources.encrypted import _check_algorithm
 
-    spark = df.sparkSession
     entries = _common_conf(kms_url, None) | {
         "parquet.encryption.uniform.key": key_id,
         "parquet.encryption.algorithm": _check_algorithm(algorithm),
         "parquet.compression.codec.zstd.level": "19",
         "parquet.writer.version": "PARQUET_2_0",
     }
-    with _pme_hadoop_conf(spark, entries):
-        df.write.mode(mode).option("compression", "zstd").parquet(path)
+    df.write.mode(mode).options(**entries).option("compression", "zstd").parquet(path)
 
 
 def read_encrypted_native(
@@ -236,19 +229,10 @@ def read_encrypted_native(
     *,
     columns: list[str] | None = None,
 ) -> DataFrame:
-    """Distributed decrypting scan through Spark's own parquet source.
-
-    The hadoop conf (including the access token and crypto factory class)
-    is captured when the scan EXECUTES, not when the DataFrame is defined.
-    The scan runs to completion inside a scoped conf (set → scan →
-    restore, same discipline as the write path) and the result is pinned
-    with ``persist(MEMORY_ONLY)`` + a materializing count. The cached
-    plan's file-scan RDD holds the hadoop conf it was planned with (Spark
-    broadcasts a SerializableConfiguration into FileScanRDD), so the
-    returned frame no longer depends on session-global crypto state: a
-    later conf change cannot swap tokens underneath it, and even a block
-    evicted under memory pressure recomputes against the ORIGINAL
-    captured conf. An unauthorized projection therefore fails HERE, at
+    """Distributed decrypting scan through Spark's own parquet source,
+    pinned: the scan (its access token a read option of its relation)
+    runs at call time and its result is held with ``persist(MEMORY_ONLY)``
+    + a materializing count, so an unauthorized projection fails HERE, at
     call time, not at some later action.
 
     MEMORY_ONLY is deliberate: the materialized blocks hold DECRYPTED
@@ -260,16 +244,15 @@ def read_encrypted_native(
 
     CACHE ISOLATION: Spark's CacheManager substitutes cached data into any
     later query whose analyzed plan contains a subtree equal to the cached
-    plan — and the access token lives in the hadoop conf, which is NOT
-    part of plan equality. A bare ``persist`` of the scan would therefore
-    let a later read of the same path under a WEAKER token plan-match the
-    decrypted cache and bypass KMS authorization entirely. To prevent
-    that, each call appends a per-call unique literal tag column before
-    persisting and projects it away on the returned frame: the cached
-    plan is unique to this call, so no other read — different token, no
-    token, or even a repeat of the same call — can ever be served from
-    it. (The deliberate cost: repeated same-token reads don't share a
-    cache. Authorization is re-checked per call, which is the point.)
+    plan. Reads under different tokens never match, because relation
+    options (the token among them) are part of plan equality. Two
+    same-token reads of one path WOULD match, so each call appends a
+    per-call unique literal tag column before persisting and projects it
+    away on the returned frame. Without the tag, the two calls share one
+    cache entry: one caller's ``unpersist`` frees the other's blocks, and
+    the repeat call is served from cache with no KMS round trip, so
+    authorization is not re-checked per call. (The deliberate cost:
+    repeated same-token reads don't share a cache.)
 
     Unpersist contract: ``.unpersist()`` on the RETURNED frame releases
     the pinned decrypted blocks (the method is forwarded to the internal
@@ -287,17 +270,13 @@ def read_encrypted_native(
     from pyspark.sql import functions as F
 
     tag = f"__pme_pin_{os.getpid()}_{next(_PIN_IDS)}__"
-    entries = _common_conf(kms_url, token)
-    with _pme_hadoop_conf(spark, entries):
-        df = spark.read.parquet(path)
-        if columns:
-            df = df.select(*columns)
-        pinned = df.withColumn(tag, F.lit(tag)).persist(StorageLevel.MEMORY_ONLY)
-        try:
-            pinned.count()  # materialize inside the conf scope; authz fails here
-        except Exception:
-            pinned.unpersist()
-            raise
+    df = _decrypting_frame(spark, path, kms_url, token, columns)
+    pinned = df.withColumn(tag, F.lit(tag)).persist(StorageLevel.MEMORY_ONLY)
+    try:
+        pinned.count()  # materialize now; authz fails here
+    except Exception:
+        pinned.unpersist()
+        raise
     out = pinned.drop(tag)
     # Forward unpersist to the internal pinned frame so callers holding
     # only the returned (projected) frame can release the decrypted blocks.
@@ -337,29 +316,12 @@ def decrypting_scan(
     *,
     columns: list[str] | None = None,
 ):
-    """Lazy decrypting scan, scoped: the PME hadoop conf is set for the
-    duration of the ``with`` block and restored on exit, so it can never
-    leak into a later unrelated read/write (which would silently encrypt
-    a plain ``df.write.parquet`` with this session's keys).
-
-    Use this instead of :func:`read_encrypted_native` for scans too large
-    to materialize: the yielded frame is lazy, nothing is persisted, and
-    filters/projections applied inside the block still push down into the
-    encrypted parquet scan (partition pruning included). All actions on
-    the frame must happen inside the block — the conf the executors read
-    at scan time is gone after exit.
-
-    CONCURRENCY: the hadoop Configuration hangs off the shared
-    SparkContext, so this set→scan→restore scope assumes a single-threaded
-    driver: a concurrent read/write on ANOTHER thread would silently
-    inherit the PME conf (or clobber it mid-scan), and even
-    ``spark.newSession()`` does not isolate it. Serialize encrypted I/O
-    through one driver thread per JVM.
-    """
-    entries = _common_conf(kms_url, token)
-    with _pme_hadoop_conf(spark, entries):
-        df = spark.read.parquet(path)
-        yield df.select(*columns) if columns else df
+    """Lazy decrypting scan: the yielded frame carries the token as a
+    read option, nothing is persisted, and filters/projections applied to
+    it still push down into the encrypted parquet scan (partition pruning
+    included). Use this instead of :func:`read_encrypted_native` for scans
+    too large to materialize."""
+    yield _decrypting_frame(spark, path, kms_url, token, columns)
 
 
 def rotate_encrypted_native(
@@ -379,15 +341,10 @@ def rotate_encrypted_native(
     keys). The source stays immutable.
 
     The decrypted frame is pinned via :func:`pinned_decrypting_scan`
-    (MEMORY_ONLY, never spilled, released on exit) rather than streamed
-    lazily: the re-encrypting write runs inside its OWN scoped hadoop
-    conf, which would replace the read token at scan-execution time — a
-    lazy scan consumed by the write would decrypt under the WRITE conf
-    (no token) and fail. Pinning materializes plaintext inside the read
-    scope, so the write consumes cached blocks. At 100 TB, rotation runs
-    per-partition behind a snapshot-manifest swap (operators/storage.py)
-    exactly as the Arrow twin documents — each partition's pin is then
-    bounded by partition size, not corpus size.
+    (MEMORY_ONLY, never spilled, released on exit). At 100 TB, rotation
+    runs per-partition behind a snapshot-manifest swap
+    (operators/storage.py) exactly as the Arrow twin documents — each
+    partition's pin is then bounded by partition size, not corpus size.
 
     With INTERNAL key material, wrapped DEKs live in each file's footer,
     so rotating a master key necessarily rewrites files; parquet-mr's
@@ -428,9 +385,13 @@ def rotate_master_keys_native(
     entries = _common_conf(kms_url, token) | {
         "parquet.encryption.key.material.store.internally": "false",
     }
-    with _pme_hadoop_conf(spark, entries):
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        toolkit = jvm.org.apache.parquet.crypto.keytools.KeyToolkit
-        toolkit.removeCacheEntriesForAllTokens()
-        toolkit.rotateMasterKeys(path, conf)
-        toolkit.removeCacheEntriesForAllTokens()
+    # a private copy: the session's hadoop conf never sees the token
+    conf = jvm.org.apache.hadoop.conf.Configuration(
+        spark.sparkContext._jsc.hadoopConfiguration()
+    )
+    for k, v in entries.items():
+        conf.set(k, v)
+    toolkit = jvm.org.apache.parquet.crypto.keytools.KeyToolkit
+    toolkit.removeCacheEntriesForAllTokens()
+    toolkit.rotateMasterKeys(path, conf)
+    toolkit.removeCacheEntriesForAllTokens()

@@ -37,6 +37,10 @@ EXPECTED = [
     "OK kms_outage_arrow_scan_fails_attributably",
     "OK kms_outage_session_survives",
     "OK unpersist_releases_all",
+    "OK concurrent_encrypted_and_plain_io",
+    "OK token_redacted_from_plans",
+    "OK pin_independence",
+    "OK q49f_native_grouped_overlap",
 ]
 
 
