@@ -2234,32 +2234,27 @@ def shingle_tf(
     tf checkpoint that the round-8 A/B measured as a loss: the array
     frame is |docs| rows, its materialization costs ~0.5 s at sf0.1, and
     q55c's six tf branches each re-run only the cheap explode+hash-agg."""
-    tf, _ = shingle_tf_with_census(docs, spill_safe, pins)
+    tf, _, _ = _shingle_tf_census_arrays(docs, spill_safe, pins)
     return tf
-
-
-def shingle_tf_with_census(
-    docs: DataFrame, spill_safe: bool = False, pins: list | None = None
-) -> tuple[DataFrame, DataFrame]:
-    """(tf, gram_counts): :func:`shingle_tf` plus the per-gram document
-    frequency ``(g, __rn)`` — exactly ``tf.groupBy(g).count()`` (tf has
-    one row per (doc, g)), but derived from the CHECKPOINTED array frame
-    via ``explode(array_distinct(gs))``, which partial-aggregates to
-    vocabulary size on the map side and shuffles only the tiny census
-    frame. Computing the same census through tf costs the full
-    (doc_id, g) exchange first — that extra pass was the hot-feature
-    prescreen's ~+2 s tax on every clean-corpus q55c run (VERDICT r14
-    #4); this census makes the prescreen pay one cheap vocab shuffle
-    instead."""
-    tf, gram_counts, _arrays = _shingle_tf_census_arrays(docs, spill_safe, pins)
-    return tf, gram_counts
 
 
 def _shingle_tf_census_arrays(
     docs: DataFrame, spill_safe: bool = False, pins: list | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(tf, gram_counts, arrays): :func:`shingle_tf_with_census` plus the
-    CHECKPOINTED shingle-array frame itself — |docs| rows, the cheapest
+    """(tf, gram_counts, arrays): :func:`shingle_tf` plus two frames read
+    off the CHECKPOINTED shingle-array frame.
+
+    ``gram_counts`` is the per-gram document frequency ``(g, __rn)`` —
+    exactly ``tf.groupBy(g).count()`` (tf has one row per (doc, g)), but
+    derived via ``explode(array_distinct(gs))``, which partial-aggregates
+    to vocabulary size on the map side and shuffles only the tiny census
+    frame. Computing the same census through tf costs the full
+    (doc_id, g) exchange first — that extra pass was the hot-feature
+    prescreen's ~+2 s tax on every clean-corpus q55c run (VERDICT r14
+    #4); this census makes the prescreen pay one cheap vocab shuffle
+    instead.
+
+    ``arrays`` is the array frame itself — |docs| rows, the cheapest
     place to read per-doc distinct-gram counts
     (``size(array_distinct(gs))``) without paying the full (doc_id, g)
     tf exchange. The grouped operator's bound prescreen (r16) reads
@@ -2332,7 +2327,7 @@ def salted_hot_feature_join(
     ``right_counts``: precomputed ``right.groupBy(key).count()`` as
     ``(key, __rn)`` — r15, VERDICT r14 #4. The caller often has (or can
     derive) this census far cheaper than a fresh groupBy over the
-    postings (shingle_tf_with_census folds it to vocabulary size on the
+    postings (_shingle_tf_census_arrays folds it to vocabulary size on the
     map side); threading it in removes the census pass that taxed every
     clean-corpus q55c run. Must be EXACTLY the right frame's per-key
     row count — both the prescreen and the grid sizing read it.
@@ -2423,10 +2418,57 @@ def allpairs_candidates(
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
     """Prefix-filtered candidate pairs (doc_a < doc_b): a SUPERSET of all
     pairs with cosine >= t, generated without ever joining on a hot
-    feature (steps 1-3 of :func:`allpairs_cosine`'s docstring).
+    feature — steps 1-3 of exact all-pairs sparse cosine >= t via prefix
+    filtering (Bayardo, Ma & Srikant, WWW'07 "Scaling Up All Pairs
+    Similarity Search"); :func:`allpairs_verify` is step 4.
+
+    The naive form joins full posting lists on the shingle key: a
+    boilerplate shingle shared by k documents contributes k^2 join hits —
+    quadratic on one reducer at web-corpus scale, the same failure class
+    q45b's DF cap kills. Prefix filtering is the LOSSLESS fix:
+
+    1. order features globally by (document frequency DESC, shingle) —
+       common features first;
+    2. per document, walk its features in that order accumulating the
+       bound sum(x_hat_j * maxw_j) where x_hat is the L2-normalized weight
+       and maxw_j the corpus-wide max normalized weight of feature j. The
+       initial run with cumulative bound < t - eps is the SUFFIX: a
+       document sharing only suffix features can never reach cosine t
+       (its dot is bounded by that sum). Only the remaining rare tail
+       (the PREFIX) enters the candidate index.
+    3. candidates = prefix(a) JOIN full-tf(b) on the shingle, a < b: any
+       qualifying pair must share a prefix feature of a, so the candidate
+       set is a SUPERSET of the answer — hot/boilerplate shingles sit in
+       suffixes and never become join keys, which is exactly the skew
+       kill;
+    4. exact verification in pure BIGINT arithmetic (dot, squared norms,
+       cross-multiplied threshold test) — associativity-safe, so the
+       whole operator is hash-checked against the brute-force oracle.
+
+    The float prefix bound only chooses HOW MUCH to index (any error is
+    absorbed by eps and merely enlarges the candidate set); every emitted
+    number is integer-derived. Fixed-point range: the accept test's LHS
+    den^2 * dot^2 can reach den^2 * (norm2_a * norm2_b) (Cauchy-Schwarz;
+    den=2 here), so BIGINT safety needs norm2_a * norm2_b < 2^63/den^2 =
+    2^61, i.e. sum(w^2) < ~1.5e9 per doc — any real document qualifies;
+    a production guard would clamp or fall back to DOUBLE compare for
+    larger vectors.
+
+    Scale notes (100 TB): tf and the norm are one hash-agg each; the
+    feature-stats frame is vocabulary-sized (broadcast here; a shuffle
+    join at true corpus scale, same note as q53's df frame); the rank
+    walk is a per-document window (bounded partitions); candidate
+    generation joins a rare-feature index against postings; verification
+    touches candidate pairs only. On q55c's one-chunk plan tf feeds six
+    branches (norms, feature stats, rank walk, both candidate sides, both
+    verify sides) and is deliberately NOT checkpointed: an eager
+    localCheckpoint variant measured 6.1 -> 10.5 s at sf0.1 (min-of-3),
+    because AQE reuses the identical shuffle stages across branches and
+    the upstream scan is cheap. Where the scan is NOT cheap (100 TB of
+    cold object storage), persist tf to MEMORY_AND_DISK instead.
 
     ``gram_counts``: optional precomputed per-gram df census
-    (see :func:`shingle_tf_with_census`) forwarded to the hot-feature
+    (see :func:`_shingle_tf_census_arrays`) forwarded to the hot-feature
     prescreen so it skips its own postings aggregate (VERDICT r14 #4).
 
     ``gram_max`` (r16): precomputed ``max(df)`` over the gram census,
@@ -2494,65 +2536,6 @@ def allpairs_candidates(
         "doc_id", "g", "w"
     )
     return cand, suffix
-
-
-def allpairs_cosine(docs: DataFrame) -> DataFrame:
-    """Exact all-pairs sparse cosine >= t via prefix filtering (Bayardo,
-    Ma & Srikant, WWW'07 "Scaling Up All Pairs Similarity Search").
-
-    The naive form joins full posting lists on the shingle key: a
-    boilerplate shingle shared by k documents contributes k^2 join hits —
-    quadratic on one reducer at web-corpus scale, the same failure class
-    q45b's DF cap kills. Prefix filtering is the LOSSLESS fix:
-
-    1. order features globally by (document frequency DESC, shingle) —
-       common features first;
-    2. per document, walk its features in that order accumulating the
-       bound sum(x_hat_j * maxw_j) where x_hat is the L2-normalized weight
-       and maxw_j the corpus-wide max normalized weight of feature j. The
-       initial run with cumulative bound < t - eps is the SUFFIX: a
-       document sharing only suffix features can never reach cosine t
-       (its dot is bounded by that sum). Only the remaining rare tail
-       (the PREFIX) enters the candidate index.
-    3. candidates = prefix(a) JOIN full-tf(b) on the shingle, a < b: any
-       qualifying pair must share a prefix feature of a, so the candidate
-       set is a SUPERSET of the answer — hot/boilerplate shingles sit in
-       suffixes and never become join keys, which is exactly the skew
-       kill;
-    4. exact verification in pure BIGINT arithmetic (dot, squared norms,
-       cross-multiplied threshold test) — associativity-safe, so the
-       whole operator is hash-checked against the brute-force oracle.
-
-    The float prefix bound only chooses HOW MUCH to index (any error is
-    absorbed by eps and merely enlarges the candidate set); every emitted
-    number is integer-derived. Fixed-point range: the accept test's LHS
-    den^2 * dot^2 can reach den^2 * (norm2_a * norm2_b) (Cauchy-Schwarz;
-    den=2 here), so BIGINT safety needs norm2_a * norm2_b < 2^63/den^2 =
-    2^61, i.e. sum(w^2) < ~1.5e9 per doc — any real document qualifies;
-    a production guard would clamp or fall back to DOUBLE compare for
-    larger vectors.
-
-    Scale notes (100 TB): tf and the norm are one hash-agg each; the
-    feature-stats frame is vocabulary-sized (broadcast here; a shuffle
-    join at true corpus scale, same note as q53's df frame); the rank
-    walk is a per-document window (bounded partitions); candidate
-    generation joins a rare-feature index against postings; verification
-    touches candidate pairs only."""
-    # tf feeds six plan branches (norms, feature stats, rank walk, both
-    # candidate sides, both verify sides). Deliberately NOT checkpointed:
-    # an eager localCheckpoint variant measured 6.1 -> 10.5 s at sf0.1
-    # (min-of-3, clean bench) — the serial materialization costs more
-    # than the recompute, because AQE reuses the identical shuffle query
-    # stages across branches at runtime and the upstream scan is cheap.
-    # On a cluster where the scan is NOT cheap (100 TB of cold object
-    # storage), persist tf to MEMORY_AND_DISK instead — the branch count
-    # is the same; only the recompute price changes.
-    tf, gram_counts = shingle_tf_with_census(docs)
-    nrm = tf.groupBy("doc_id").agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
-    cand, suffix = allpairs_candidates(
-        tf, nrm, gram_counts=gram_counts, split_verify=True
-    )
-    return allpairs_verify(tf, nrm, cand, suffix=suffix)
 
 
 #: Pairs per salt cell for the verify stage's doc_a fan-out. The verify
@@ -2631,10 +2614,11 @@ def allpairs_verify(
     salted: bool = False,
     suffix: DataFrame | None = None,
 ) -> DataFrame:
-    """q55c's exact verification stage, factored out of
-    :func:`allpairs_cosine` so the bounded-spill chunked execution path
-    (:func:`verify_chunk` + scripts/sf10_chunked_experiment.py) runs the
-    IDENTICAL plan on a candidate subset.
+    """q55c's exact verification stage (step 4 of
+    :func:`allpairs_candidates`' docstring), factored out so the
+    bounded-spill chunked execution path (:func:`verify_chunk` +
+    scripts/sf10_chunked_experiment.py) runs the IDENTICAL plan on a
+    candidate subset.
 
     Per-pair verification re-joins candidates against the posting rows:
     the first join fans out |candidates| x |doc_a grams|, the second
@@ -2738,13 +2722,14 @@ def verify_chunk(cand: DataFrame, chunk: int, n_chunks: int) -> DataFrame:
 )
 def q55c_allpairs_sparse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All document pairs with shingle-tf cosine >= 1/2, found by exact
-    prefix-filtered all-pairs search (see :func:`allpairs_cosine`) and
-    verified in integer arithmetic — the sparse-vector complement of the
-    dense-embedding near-dup family (q55/q55b) and the similarity-join
-    complement of the threshold-free ANN top-k family (q54*)."""
+    prefix-filtered all-pairs search (see :func:`allpairs_candidates`)
+    and verified in integer arithmetic — the sparse-vector complement of
+    the dense-embedding near-dup family (q55/q55b) and the similarity-join
+    complement of the threshold-free ANN top-k family (q54*). Runs as
+    :func:`grouped_exact_join` at one chunk: the lazy monolithic plan."""
     prep(spark)
     docs = load(spark, sf_dir, "documents")
-    return allpairs_cosine(docs)
+    return grouped_exact_join(spark, docs, "q55c", n_chunks=1)[0]
 
 
 # ---------------------------------------------------------------------------
@@ -3064,11 +3049,11 @@ def q49c_jaccard_ppjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, so the global join is fully hash-checked against the
     brute-force oracle. Scale: candidates ~ sharing-pairs over LOW-df
     tokens only; a boilerplate shingle in 10^6 docs is high-df, lands in
-    every suffix, and never generates a candidate."""
+    every suffix, and never generates a candidate. Runs as
+    :func:`grouped_exact_join` at one chunk: the lazy monolithic plan."""
     prep(spark)
     docs = load(spark, sf_dir, "documents")
-    toks, cand, suffix = ppjoin_candidates(docs, split_verify=True)
-    return ppjoin_verify(toks, cand, suffix=suffix)
+    return grouped_exact_join(spark, docs, "q49c", n_chunks=1)[0]
 
 
 def ppjoin_verify(
@@ -3352,11 +3337,6 @@ GROUPED_VERIFY_ROW_BYTES = 24
 #: should be running on a cluster with a larger aggregate budget anyway.
 GROUPED_MAX_CHUNKS = 64
 
-#: (op, est_rows, est_bytes, budget_bytes, n_chunks) of the most recent
-#: auto-sizing decision — read by the experiment scripts so artifacts can
-#: record WHY a chunk count was chosen, and by tests.
-LAST_GROUPED_SIZING: dict[str, int | str] = {}
-
 
 def grouped_scratch_budget(spark: SparkSession, work_dir: str) -> int:
     """Scratch budget in bytes for grouped execution: the explicit conf
@@ -3371,91 +3351,50 @@ def grouped_scratch_budget(spark: SparkSession, work_dir: str) -> int:
     return max(1, int(st.f_bavail * st.f_frsize * GROUPED_SCRATCH_FRACTION))
 
 
-def grouped_chunk_count(
-    cand: DataFrame, postings: DataFrame, budget_bytes: int, id_col: str = "doc_id"
-) -> tuple[int, int]:
-    """(n_chunks, est_incidence_rows): size the residue-class count from
-    the work the verify stage will actually shuffle, instead of a fixed
-    default (VERDICT r11 #3).
-
-    The verify stage's live shuffle is the pair-token incidence: joining
-    candidates to doc_a's postings fans out sum(m_a) rows and the
-    (doc_b, g) probe side re-shuffles the m_b postings per pair, so the
-    estimate is sum over candidate pairs of (m_a + m_b) — computable
-    with one cheap aggregate over the ALREADY-materialized candidate
-    parquet joined to per-doc posting counts (both frames the grouped
-    plan has on scratch disk regardless). n_chunks = ceil(estimated
-    bytes / budget), clamped to [1, GROUPED_MAX_CHUNKS]: at driver/bench
-    scales the estimate sits far under any real disk's budget and the
-    rule picks 1 (the grouped operator degenerates to the monolith plus
-    one materialization — the honest answer when no spill bounding is
-    needed); at sf10 (~5e9 incidence rows, ~120 GB estimated vs ~19 GB
-    of budget on this VM) it picks the 7-10 range the disk-overflow
-    experiments converged on by hand."""
-    import math as _math
-
-    if {"ma", "mb"} <= set(cand.columns):
-        # the PPJoin candidate frame already carries both posting sizes
-        # (length-filter residue) — one aggregate over the materialized
-        # cand parquet, no postings scan at all (which, under
-        # encrypt_scratch, would be a decrypting read)
-        est = (
-            cand.agg(F.sum(F.col("ma") + F.col("mb")).alias("rows")).first()["rows"]
-        ) or 0
-    else:
-        sizes = postings.groupBy(id_col).agg(F.count(F.lit(1)).alias("__m"))
-        sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("__m").alias("__ma"))
-        sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("__m").alias("__mb"))
-        est = (
-            cand.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .agg(F.sum(F.col("__ma") + F.col("__mb")).alias("rows"))
-            .first()["rows"]
-        ) or 0
-    n = int(_math.ceil(est * GROUPED_VERIFY_ROW_BYTES / budget_bytes))
-    return max(1, min(GROUPED_MAX_CHUNKS, n)), int(est)
-
-
 def grouped_exact_join(
     spark: SparkSession,
     docs: DataFrame,
     op: str,
     n_chunks: int | None = None,
     encrypt_scratch: bool = False,
-) -> DataFrame:
-    """Run q49c's or q55c's verify stage in ``n_chunks`` bounded-spill
-    groups (``op`` in {"q49c", "q55c"}) and return the union frame —
-    column-identical to the monolithic operator.
+) -> tuple[DataFrame, dict]:
+    """The exact similarity join — q49c's PPJoin Jaccard or q55c's
+    Bayardo cosine (``op`` in {"q49c", "q55c"}) — with its verify stage
+    run in ``n_chunks`` bounded-spill groups. Returns ``(frame,
+    sizing)``: the answer frame, column-identical at every chunk count,
+    and the sizing decision as a plain dict (``op, mode, est_rows,
+    est_bytes, budget_bytes, n_chunks``; ``mode`` is "forced",
+    "bound_prescreen" or "exact_census"; the estimates and budget are
+    None when forced).
 
-    Stage layout (mirrors scripts/sf10_chunked_experiment.py's phases,
+    One pipeline (mirrors scripts/sf10_chunked_experiment.py's phases,
     one session instead of one JVM per phase):
 
-    1. materialize: postings (q49c: toks; q55c: tf + norms) and the
-       prefix-filtered candidate frame to scratch parquet. Candidates
-       are cheap relative to verify and rescanned by every chunk, so
-       they are computed exactly once.
-    2. verify chunk i: the IDENTICAL factored verify plan
-       (:func:`ppjoin_verify` / :func:`allpairs_verify`) over
-       ``verify_chunk(cand, i, n_chunks)``, written to its own chunk
-       directory — one sequential Spark job per chunk, so at most one
-       chunk's pair-token shuffle is live at a time.
-    3. reduce: read the explicit chunk-directory list back with the
-       verify schema pinned (a chunk with zero surviving pairs leaves a
-       part-less directory; schema inference would fail on it — the
-       ADVICE-r10 lesson from the experiment script's reduce).
-
-    ``n_chunks`` resolution (r12, bound prescreen r16): an explicit
-    argument wins, then the SPARK_GRAFT_GROUPED_CHUNKS env override.
-    Otherwise a gram-census UPPER BOUND on the verify incidence
-    ((sum_g df_g^2) * 2 * m_max) is computed first: when even the bound
-    fits the scratch budget in one chunk, the operator returns the
-    MONOLITHIC lazy plan — no scratch materializations, censuses or
-    chunk writes at all, because at n_chunks = 1 nothing is ever re-read
-    and those jobs were pure overhead (VERDICT r15 #1: a ~40-job
-    sequential chain, the 2-3 s q55d/q49e floor at sf0.1). Only when the
-    bound exceeds the budget does the exact-census sizing rule run over
-    the materialized candidate frame. Either decision is recorded in
-    LAST_GROUPED_SIZING (``mode``: "bound_prescreen" / "exact_census").
+    1. build the lazy candidate frames;
+    2. decide ``n_chunks``: an explicit argument wins, then the
+       SPARK_GRAFT_GROUPED_CHUNKS env override ("forced"). Otherwise a
+       gram-census UPPER BOUND on the verify incidence
+       ((sum_g df_g^2) * 2 * m_max) is computed first, and when even the
+       bound fits the scratch budget the answer is one chunk
+       ("bound_prescreen"). Only when the bound exceeds the budget does
+       the exact census size the chunks from the materialized candidate
+       frame ("exact_census");
+    3. materialize postings and candidates to scratch parquet — only for
+       the exact census or a forced count above 1, because at one chunk
+       nothing is ever re-read and every materialization, census and
+       chunk write is pure job-chain overhead (VERDICT r15 #1: a ~40-job
+       sequential chain, the 2-3 s q55d/q49e floor at sf0.1);
+    4. one tail: at one chunk with nothing pinned, the lazy verify frame
+       itself — at a forced single chunk exactly the monolithic q49c /
+       q55c plan, which is how those two queries run. Otherwise the
+       IDENTICAL factored verify plan (:func:`ppjoin_verify` /
+       :func:`allpairs_verify`) over ``verify_chunk(cand, i, n_chunks)``,
+       each chunk written to its own directory (one sequential Spark job
+       per chunk, so at most one chunk's pair-token shuffle is live),
+       then the MEMORY_ONLY pins are released and the chunk directories
+       read back with the verify schema pinned (a chunk with zero
+       surviving pairs leaves a part-less directory; schema inference
+       would fail on it — ADVICE r10).
 
     PLAINTEXT-SCRATCH CONTRACT: this function materializes postings,
     candidate pairs, and chunk outputs as PLAINTEXT parquet under the
@@ -3468,7 +3407,9 @@ def grouped_exact_join(
     encrypt/decrypt pass per materialization. The contract is pinned by
     tests/test_pipeline.py::test_grouped_scratch_encryption_boundary.
     """
+    import math as _math
     import os as _os
+    from concurrent.futures import ThreadPoolExecutor
 
     from parquet_modular_encryption_spark.scratch import scratch_dir
 
@@ -3530,256 +3471,179 @@ def grouped_exact_join(
         df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
 
-    # n_chunks forced up front? Explicit argument wins, then the env
-    # override — either skips the bound prescreen (the caller has
-    # already decided chunking is wanted).
-    env = _os.environ.get("SPARK_GRAFT_GROUPED_CHUNKS")
-    forced = n_chunks if n_chunks is not None else (max(1, int(env)) if env else None)
+    def _overlapped(*jobs):
+        # Independent scratch writes overlap via a small driver thread
+        # pool (guide §2.6): they are separate Spark jobs with no mutual
+        # dependency, and running them serially left the session idling
+        # through each write's task tail.
+        with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+            futures = [pool.submit(_materialize, *job) for job in jobs]
+            return [f.result() for f in futures]
 
+    # ---- 1. lazy candidate frames. spill_safe under encrypt_scratch: the
+    # shingle-array checkpoint inside candidate generation must not park
+    # content derivatives on executor disk in plaintext (see
+    # _content_checkpoint)
     if op == "q49c":
-        # spill_safe under encrypt_scratch: the shingle-array checkpoint
-        # inside candidate generation must not park content derivatives
-        # on executor disk in plaintext (see _content_checkpoint)
         toks, cand, suffix = ppjoin_candidates(
             docs, spill_safe=encrypt_scratch, pins=pins, split_verify=True
         )
     else:
+        # q55c's candidates are built after sizing: they take the
+        # prescreen's max df, and over the materialized tf when chunking
         tf, gram_counts, arrays = _shingle_tf_census_arrays(
             docs, spill_safe=encrypt_scratch, pins=pins
         )
 
-    budget = None
-    gram_max: int | None = None  # q55c-op prescreen byproduct (max df)
+    # ---- 2. n_chunks: forced, else the bound prescreen, else the exact
+    # census (sized in step 3, once candidates are on scratch)
+    env = _os.environ.get("SPARK_GRAFT_GROUPED_CHUNKS")
+    forced = n_chunks if n_chunks is not None else (max(1, int(env)) if env else None)
+    sizing: dict = dict(
+        op=op, mode="forced", est_rows=None, est_bytes=None, budget_bytes=None,
+        n_chunks=forced,
+    )
+    gram_max: int | None = None  # q55c prescreen byproduct (max df)
     if forced is None:
         budget = grouped_scratch_budget(spark, work)
-        # Bound prescreen (r16, VERDICT r15 #1): before materializing
-        # anything, upper-bound the verify incidence from the gram census
-        # alone. Candidate-join hits are at most sum_g df_g^2 (prefix
-        # rows per gram <= posting rows per gram = df_g), distinct pairs
-        # <= hits, and each pair contributes ma+mb <= 2*m_max incidence
-        # rows, so  est_rows <= (sum_g df_g^2) * 2 * m_max.  When even
-        # this BOUND fits the scratch budget in one chunk, no spill
-        # bounding is needed and the bounded-spill plan IS the monolithic
-        # plan: every scratch materialization, census and chunk write
-        # exists only so n_chunks > 1 can re-read instead of recompute —
-        # at n_chunks = 1 they were pure job-chain overhead (the measured
-        # ~40 sequential driver-blocking jobs putting a 2-3 s floor under
-        # q55d/q49e at sf0.1, VERDICT r15 #1). A template corpus pushes
-        # df_g^2 quadratic and blows the bound, so the exact-census path
-        # below engages — the prescreen errs conservative by construction
-        # (bound >= exact). Cost when it fails: one vocabulary-sized
-        # aggregate over the already-checkpointed array frame. Doubles
-        # avoid the bigint overflow df^2 would hit at web scale; the
-        # bound needs no exactness, only monotonicity.
+        # Bound prescreen (r16): candidate-join hits are at most
+        # sum_g df_g^2 (prefix rows per gram <= posting rows per gram =
+        # df_g), distinct pairs <= hits, and each pair contributes
+        # ma+mb <= 2*m_max incidence rows, so
+        # est_rows <= (sum_g df_g^2) * 2 * m_max. A template corpus
+        # pushes df_g^2 quadratic and blows the bound, so the exact
+        # census engages — the prescreen errs conservative by
+        # construction (bound >= exact). Cost when it fails: one
+        # vocabulary-sized aggregate over the already-checkpointed
+        # array frame. Doubles avoid the bigint overflow df^2 would hit
+        # at web scale; the bound needs no exactness, only monotonicity.
         if op == "q49c":
-            row = (
-                toks.groupBy("tok")
-                .agg(F.count(F.lit(1)).alias("__c"), F.max("m").alias("__mm"))
-                .agg(
-                    F.sum((F.col("__c") * F.col("__c")).cast("double")).alias("h"),
-                    F.max("__mm").alias("mm"),
-                )
-                .first()
-            )
-            hits_bound, m_max = float(row["h"] or 0.0), int(row["mm"] or 0)
+            per_gram = toks.select("m", F.col("tok").alias("g"))
         else:
-            # one fused job (mirrors the q49c branch): per-gram df AND
-            # per-doc distinct-gram size ride the same exploded frame.
-            # max df rides along too — it is exactly the hot-feature
-            # prescreen's census max, so the bound path can hand it to
-            # salted_hot_feature_join and pay ZERO extra actions over
-            # the monolith (this job replaces the prescreen's own).
-            row = (
-                arrays.select(
-                    F.size(F.array_distinct("gs")).alias("m"),
-                    F.explode(F.array_distinct("gs")).alias("g"),
-                )
-                .groupBy("g")
-                .agg(F.count(F.lit(1)).alias("__c"), F.max("m").alias("__mm"))
-                .agg(
-                    F.sum((F.col("__c") * F.col("__c")).cast("double")).alias("h"),
-                    F.max("__mm").alias("mm"),
-                    F.max("__c").alias("rmax"),
-                )
-                .first()
+            # per-doc distinct-gram size rides the same exploded frame
+            per_gram = arrays.select(
+                F.size(F.array_distinct("gs")).alias("m"),
+                F.explode(F.array_distinct("gs")).alias("g"),
             )
-            hits_bound, m_max = float(row["h"] or 0.0), int(row["mm"] or 0)
+        # one fused job. max df rides along: it is exactly the q55c
+        # hot-feature prescreen's census max, so the bound path hands it
+        # to salted_hot_feature_join and pays ZERO extra actions over the
+        # monolith (this job replaces the prescreen's own)
+        row = (
+            per_gram.groupBy("g")
+            .agg(F.count(F.lit(1)).alias("__c"), F.max("m").alias("__mm"))
+            .agg(
+                F.sum((F.col("__c") * F.col("__c")).cast("double")).alias("h"),
+                F.max("__mm").alias("mm"),
+                F.max("__c").alias("rmax"),
+            )
+            .first()
+        )
+        if op == "q55c":
             gram_max = int(row["rmax"] or 0)
-        bound_rows = hits_bound * 2.0 * m_max
-        if bound_rows * GROUPED_VERIFY_ROW_BYTES <= budget:
-            LAST_GROUPED_SIZING.clear()
-            LAST_GROUPED_SIZING.update(
-                op=op,
-                mode="bound_prescreen",
-                est_rows=int(min(bound_rows, float(2**62))),
-                est_bytes=int(
-                    min(bound_rows * GROUPED_VERIFY_ROW_BYTES, float(2**62))
-                ),
-                budget_bytes=budget,
-                n_chunks=1,
-            )
-            if op == "q49c":
-                result = ppjoin_verify(toks, cand, suffix=suffix)
-            else:
-                nrm = tf.groupBy("doc_id").agg(
-                    F.sum(F.col("w") * F.col("w")).alias("n2")
-                )
-                cand, suffix = allpairs_candidates(
-                    tf,
-                    nrm,
-                    gram_counts=gram_counts,
-                    split_verify=True,
-                    gram_max=gram_max,
-                )
-                result = allpairs_verify(tf, nrm, cand, suffix=suffix)
-            if not pins:
-                # plaintext scratch (q49e/q55d): nothing is pinned, so
-                # hand the lazy monolithic frame straight back — the
-                # caller's one action computes it end to end, exactly
-                # like q49c/q55c
-                return result
-            # encrypted-lake path (q49f): the MEMORY_ONLY decrypt pins
-            # must outlive every consumer, so materialize the ANSWER
-            # frame (id pairs + exact scores — plaintext by the same
-            # keyless-id convention as the chunk outputs) before
-            # releasing them
-            out = f"{work}/out/chunk_0"
-            try:
-                schema = result.schema
-                result.write.mode("overwrite").parquet(out)
-            finally:
-                for p in pins:
-                    p.unpersist()
-            return spark.read.schema(schema).parquet(out)
-        LAST_GROUPED_SIZING.clear()  # the exact census below re-records
+        bound_rows = float(row["h"] or 0.0) * 2.0 * int(row["mm"] or 0)
+        bound_bytes = bound_rows * GROUPED_VERIFY_ROW_BYTES
+        sizing.update(
+            mode="bound_prescreen" if bound_bytes <= budget else "exact_census",
+            est_rows=int(min(bound_rows, float(2**62))),
+            est_bytes=int(min(bound_bytes, float(2**62))),
+            budget_bytes=budget,
+            n_chunks=1,
+        )
+    exact = sizing["mode"] == "exact_census"
 
-    # ---- exact-census path: chunking forced, or the bound exceeds the
-    # scratch budget. Independent scratch writes overlap via a small
-    # driver thread pool (guide §2.6): the materializations are separate
-    # Spark jobs with no mutual dependency, and running them serially
-    # left the session idling through each write's task tail — part of
-    # the measured grouped job-chain floor.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # ---- 3. scratch: only for the exact census or a forced count above 1
+    scratch = exact or sizing["n_chunks"] > 1
     if op == "q49c":
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            f_toks = pool.submit(_materialize, toks, "toks", ("tok",))
+        if scratch:
             # the suffix posting frame every chunk's verify fan-out reads
             # (r15, split verify — see ppjoin_verify): materialized once
             # so chunks neither re-run the prefix window nor re-decrypt
-            f_suffix = pool.submit(_materialize, suffix, "suffix", ("tok",))
-            f_cand = pool.submit(_materialize, cand, "cand")
-            toks_m = f_toks.result()
-            suffix_m = f_suffix.result()
-            cand_m = f_cand.result()
-
-        def _verify(part: DataFrame, salted: bool) -> DataFrame:
-            return ppjoin_verify(toks_m, part, salted=salted, suffix=suffix_m)
-
-    else:
-        # m (distinct grams per doc) rides on the norm frame so the
-        # sizing census reads per-doc posting sizes from the TINY nrm
-        # parquet instead of re-aggregating the full postings scratch
-        # (r15; unused columns are pruned from every other nrm consumer)
-        nrm = tf.groupBy("doc_id").agg(
-            F.sum(F.col("w") * F.col("w")).alias("n2"),
-            F.count(F.lit(1)).alias("m"),
-        )
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_tf = pool.submit(_materialize, tf, "tf", ("g",))
-            f_nrm = pool.submit(_materialize, nrm, "nrm")
-            tf_m = f_tf.result()
-            nrm_m = f_nrm.result()
-        cand, suffix = allpairs_candidates(
-            tf_m,
-            nrm_m,
-            gram_counts=gram_counts,
-            split_verify=True,
-            gram_max=gram_max,
-        )
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_cand = pool.submit(_materialize, cand, "cand")
-            f_suffix = pool.submit(_materialize, suffix, "suffix", ("g",))
-            cand_m = f_cand.result()
-            suffix_m = f_suffix.result()
-
-        def _verify(part: DataFrame, salted: bool) -> DataFrame:
-            return allpairs_verify(
-                tf_m, nrm_m, part, salted=salted, suffix=suffix_m
+            toks, suffix, cand = _overlapped(
+                (toks, "toks", ("tok",)), (suffix, "suffix", ("tok",)), (cand, "cand")
             )
 
-    def _cand_census(with_sizing: bool) -> tuple[int, int]:
-        """(est incidence rows, max per-doc_a candidate count) over the
-        materialized candidate parquet — ONE job for both the chunk
-        sizing and the verify-salt decision (r15: these were two
-        separate actions; the per-doc_a grouping is shared work).
-        ``with_sizing=False`` (explicit/env n_chunks) skips the size
-        columns so the census stays a bare pair-count aggregate."""
-        if not with_sizing:
-            sized = cand_m.select("doc_a", F.lit(0).alias("ma"), F.lit(0).alias("mb"))
-        elif {"ma", "mb"} <= set(cand_m.columns):
-            sized = cand_m
-        else:
-            sa = nrm_m.select(F.col("doc_id").alias("doc_a"), F.col("m").alias("ma"))
-            sb = nrm_m.select(F.col("doc_id").alias("doc_b"), F.col("m").alias("mb"))
-            sized = cand_m.join(sa, "doc_a").join(sb, "doc_b")
-        per_a = sized.groupBy("doc_a").agg(
-            F.count(F.lit(1)).alias("__vn"),
-            F.sum(F.col("ma") + F.col("mb")).alias("__rows"),
-        )
-        row = per_a.agg(
-            F.sum("__rows").alias("rows"), F.max("__vn").alias("vmax")
-        ).first()
-        return int(row["rows"] or 0), int(row["vmax"] or 0)
+        def _verify(part: DataFrame, salted: bool) -> DataFrame:
+            return ppjoin_verify(toks, part, salted=salted, suffix=suffix)
 
-    if forced is not None:
-        n_chunks = forced
-        _, vmax = _cand_census(with_sizing=False)
     else:
-        import math as _math
-
-        est_rows, vmax = _cand_census(with_sizing=True)
-        n_chunks = max(
-            1,
-            min(
-                GROUPED_MAX_CHUNKS,
-                int(_math.ceil(est_rows * GROUPED_VERIFY_ROW_BYTES / budget)),
-            ),
+        # m (distinct grams per doc) rides on the norm frame only when the
+        # exact census reads it — from the TINY nrm parquet instead of
+        # re-aggregating the full postings scratch (r15)
+        nrm = tf.groupBy("doc_id").agg(
+            F.sum(F.col("w") * F.col("w")).alias("n2"),
+            *([F.count(F.lit(1)).alias("m")] if exact else []),
         )
-        LAST_GROUPED_SIZING.clear()
-        LAST_GROUPED_SIZING.update(
-            op=op,
-            mode="exact_census",
-            est_rows=est_rows,
-            est_bytes=est_rows * GROUPED_VERIFY_ROW_BYTES,
-            budget_bytes=budget,
-            n_chunks=n_chunks,
+        if scratch:
+            tf, nrm = _overlapped((tf, "tf", ("g",)), (nrm, "nrm"))
+        cand, suffix = allpairs_candidates(
+            tf, nrm, gram_counts=gram_counts, split_verify=True, gram_max=gram_max
         )
+        if scratch:
+            cand, suffix = _overlapped((cand, "cand"), (suffix, "suffix", ("g",)))
 
-    # ONE census over the full materialized candidate frame decides
-    # verify salting for every chunk (a residue class's per-doc_a counts
-    # are bounded by the full frame's, so "no hot doc_a overall" implies
-    # none in any chunk) — the dormant-by-default contract costs one
-    # cheap parquet aggregate FOLDED INTO the sizing job (VERDICT r13
-    # #2 / r15; the salt itself engages only for true mega-fanout docs,
-    # see VERIFY_SALT_PAIR_TARGET).
-    verify_salted = vmax > VERIFY_SALT_PAIR_TARGET
+        def _verify(part: DataFrame, salted: bool) -> DataFrame:
+            return allpairs_verify(tf, nrm, part, salted=salted, suffix=suffix)
+
+    verify_salted = False
+    if scratch:
+        # ONE job over the materialized candidate parquet: the exact
+        # incidence estimate (the verify fan-out joins each pair to
+        # doc_a's m_a postings and re-shuffles doc_b's m_b, so the sum
+        # of ma+mb; forced counts skip the size columns) AND the max
+        # per-doc_a candidate count, which decides verify salting for
+        # every chunk (a residue class's per-doc_a counts are bounded by
+        # the full frame's; the salt engages only for true mega-fanout
+        # docs, see VERIFY_SALT_PAIR_TARGET)
+        if not exact:
+            sized = cand.select("doc_a", F.lit(0).alias("ma"), F.lit(0).alias("mb"))
+        elif op == "q49c":
+            sized = cand  # the PPJoin candidates carry both posting sizes
+        else:
+            sa = nrm.select(F.col("doc_id").alias("doc_a"), F.col("m").alias("ma"))
+            sb = nrm.select(F.col("doc_id").alias("doc_b"), F.col("m").alias("mb"))
+            sized = cand.join(sa, "doc_a").join(sb, "doc_b")
+        row = (
+            sized.groupBy("doc_a")
+            .agg(
+                F.count(F.lit(1)).alias("__vn"),
+                F.sum(F.col("ma") + F.col("mb")).alias("__rows"),
+            )
+            .agg(F.sum("__rows").alias("rows"), F.max("__vn").alias("vmax"))
+            .first()
+        )
+        verify_salted = int(row["vmax"] or 0) > VERIFY_SALT_PAIR_TARGET
+        if exact:
+            est_rows = int(row["rows"] or 0)
+            est_bytes = est_rows * GROUPED_VERIFY_ROW_BYTES
+            n_fit = _math.ceil(est_bytes / budget)
+            sizing.update(
+                est_rows=est_rows,
+                est_bytes=est_bytes,
+                n_chunks=max(1, min(GROUPED_MAX_CHUNKS, n_fit)),
+            )
+
+    # ---- 4. one tail
+    n = sizing["n_chunks"]
+    if n == 1 and not pins:
+        return _verify(cand, verify_salted), sizing
     schema = None
     chunk_dirs = []
     try:
-        for i in range(n_chunks):
+        for i in range(n):
             out = f"{work}/out/chunk_{i}"
-            part = _verify(verify_chunk(cand_m, i, n_chunks), verify_salted)
+            part = _verify(verify_chunk(cand, i, n), verify_salted)
             schema = part.schema
             part.write.mode("overwrite").parquet(out)
             chunk_dirs.append(out)
     finally:
         # release the decrypted MEMORY_ONLY pins: every consumer (the
         # chunk verify jobs) has run; the returned frame reads only the
-        # chunk parquet directories
+        # chunk parquet directories (id pairs + exact scores — plaintext
+        # by the keyless-id convention)
         for p in pins:
             p.unpersist()
-    return spark.read.schema(schema).parquet(*chunk_dirs)
+    return spark.read.schema(schema).parquet(*chunk_dirs), sizing
 
 
 @register(
@@ -3798,7 +3662,7 @@ def q49e_jaccard_ppjoin_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     q49c by the residue-partition lemma."""
     prep(spark)
     docs = load(spark, sf_dir, "documents")
-    return grouped_exact_join(spark, docs, "q49c")
+    return grouped_exact_join(spark, docs, "q49c")[0]
 
 
 @register(
@@ -3841,7 +3705,7 @@ def q49f_jaccard_grouped_encrypted(spark: SparkSession, sf_dir: str) -> DataFram
     lake_pins: list = []
     docs = _decrypting_pinned_read(spark, enc_path, "CONFIDENTIAL", lake_pins)
     try:
-        return grouped_exact_join(spark, docs, "q49c", encrypt_scratch=True)
+        return grouped_exact_join(spark, docs, "q49c", encrypt_scratch=True)[0]
     finally:
         for p in lake_pins:
             p.unpersist()
@@ -3861,4 +3725,4 @@ def q55d_allpairs_sparse_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     monolith invariant (SF10_r10.json)."""
     prep(spark)
     docs = load(spark, sf_dir, "documents")
-    return grouped_exact_join(spark, docs, "q55c")
+    return grouped_exact_join(spark, docs, "q55c")[0]

@@ -92,6 +92,9 @@ def _common_conf(kms_url: str, token: str | None) -> dict[str, str]:
         "parquet.crypto.factory.class": FACTORY,
         "parquet.encryption.kms.client.class": KMS_CLIENT,
         "parquet.encryption.kms.instance.url": kms_url,
+        # KeyToolkit caches KMS clients per (token, instance id): keying
+        # the id by URL keeps a second KMS from reusing the first's client
+        "parquet.encryption.kms.instance.id": kms_url,
         "parquet.encryption.key.access.token": token or "DEFAULT",
         "parquet.encryption.cache.lifetime.seconds": "60",
     }

@@ -50,7 +50,7 @@ def _get_spark():
         "sf10-chunked",
         cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         # zstd shuffle compression: the disk-tight deployment setting
-        # (see scripts/sf10_experiment.py for the lz4-vs-zstd sizing)
+        # (SF10_r09.json records the zstd spill that overflowed the disk)
         extra_conf={"spark.io.compression.codec": "zstd"},
     )
 

@@ -721,9 +721,6 @@ def _relation_option_checks(spark, plain, expected, sample_names, scratch) -> No
     toolkit = spark.sparkContext._jvm.org.apache.parquet.crypto.keytools.KeyToolkit
     server = KmsServer().start()
     kms_url = server.url
-    # parquet-mr caches KMS clients per token and KMS instance id, not per
-    # URL: drop the clients bound to the stopped server
-    toolkit.removeCacheEntriesForAllTokens()
     try:
         # 11. the grouped join's _materialize shape on its thread pool: two
         # Arrow encrypted writes each pinned back through the native reader,

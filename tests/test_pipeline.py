@@ -2134,7 +2134,7 @@ def test_allpairs_prefix_filter_boilerplate(spark):
         ALLPAIRS_T_DEN,
         ALLPAIRS_T_NUM,
         allpairs_candidates,
-        allpairs_cosine,
+        grouped_exact_join,
         shingle_tf,
     )
 
@@ -2171,7 +2171,8 @@ def test_allpairs_prefix_filter_boilerplate(spark):
 
     got = {
         (r.doc_a, r.doc_b): (r.dot_ab, r.norm2_a, r.norm2_b)
-        for r in allpairs_cosine(docs).collect()
+        # q55c's builder path: the grouped operator at one forced chunk
+        for r in grouped_exact_join(spark, docs, "q55c", n_chunks=1)[0].collect()
     }
     assert (1000, 1001) in got, "genuine near-dup pair lost"
 
@@ -2918,10 +2919,10 @@ def test_chunked_verify_equals_monolithic(spark):
 
     from parquet_modular_encryption_spark.pipeline.dedup import (
         allpairs_candidates,
-        allpairs_cosine,
         allpairs_verify,
         ppjoin_candidates,
         ppjoin_verify,
+        q55c_allpairs_sparse,
         shingle_tf,
         verify_chunk,
     )
@@ -2959,7 +2960,7 @@ def test_chunked_verify_equals_monolithic(spark):
     cand2 = allpairs_candidates(tf, nrm)
     full2 = {
         (r.doc_a, r.doc_b, r.dot_ab, r.norm2_a, r.norm2_b)
-        for r in allpairs_cosine(docs).collect()
+        for r in q55c_allpairs_sparse(spark, SF).collect()
     }
     assert full2, "fixture has no qualifying cosine pairs — test is vacuous"
     chunked2: set = set()
@@ -3254,8 +3255,11 @@ def test_grouped_auto_sizing_rule(spark, monkeypatch):
     the bound forces the exact census: candidates are materialized, the
     measured incidence (<= the bound by construction) sizes the chunks.
     (3) A budget at ~1/3 of the exact estimate picks ceil(est/budget)
-    chunks. The answer frame is identical on every rung
-    (residue-partition lemma / the bound path IS the monolith)."""
+    chunks. Rung (0), a forced single chunk, is q49c's own builder path:
+    the lazy monolith with no scratch at all. Every rung reads its
+    decision from that call's returned record, and a forced call after
+    an auto one reports "forced". The answer frame is identical on every
+    rung (residue-partition lemma / the bound path IS the monolith)."""
     import math
     import os
 
@@ -3275,22 +3279,42 @@ def test_grouped_auto_sizing_rule(spark, monkeypatch):
 
     monkeypatch.setattr(scratch_mod, "scratch_dir", recording)
     docs = load(spark, SF, "documents")
+
+    def grouped(**kw):
+        """(row count, the call's own sizing record, work dirs it made)"""
+        n_made = len(made)
+        frame, sizing = D.grouped_exact_join(spark, docs, "q49c", **kw)
+        return frame.count(), sizing, made[n_made:]
+
+    def has(dirs, sub):
+        return any(os.path.exists(f"{d}/{sub}") for d in dirs)
+
     spark.conf.set(D.GROUPED_SCRATCH_BUDGET_CONF, str(1 << 60))
     try:
+        # rung 0: a forced single chunk is the lazy monolith (q49c's own
+        # builder path) — no prescreen, no scratch, no estimate
+        n_one, s0, dirs = grouped(n_chunks=1)
+        assert s0 == {
+            "op": "q49c", "mode": "forced", "est_rows": None,
+            "est_bytes": None, "budget_bytes": None, "n_chunks": 1,
+        }, s0
+        assert not has(dirs, "cand") and not has(dirs, "out"), (
+            "a forced single chunk must skip every scratch write"
+        )
+
         # rung 1: huge budget -> bound fits -> monolithic lazy plan
-        n_huge = D.grouped_exact_join(spark, docs, "q49c").count()
-        s1 = dict(D.LAST_GROUPED_SIZING)
+        n_huge, s1, dirs = grouped()
         assert s1["op"] == "q49c" and s1["mode"] == "bound_prescreen", s1
         assert s1["n_chunks"] == 1 and s1["est_rows"] > 0, s1
-        assert not os.path.exists(f"{made[-1]}/cand"), (
+        assert s1["budget_bytes"] == 1 << 60, s1
+        assert not has(dirs, "cand") and not has(dirs, "out"), (
             "bound path must skip every scratch materialization"
         )
 
         # rung 2: budget one byte under the bound -> exact census runs;
         # the measured estimate must come in at or under the bound
         spark.conf.set(D.GROUPED_SCRATCH_BUDGET_CONF, str(s1["est_bytes"] - 1))
-        n_exact = D.grouped_exact_join(spark, docs, "q49c").count()
-        s2 = dict(D.LAST_GROUPED_SIZING)
+        n_exact, s2, dirs = grouped()
         assert s2["mode"] == "exact_census" and s2["est_rows"] > 0, s2
         assert s2["est_bytes"] <= s1["est_bytes"], "bound must dominate exact"
         expect = min(
@@ -3298,19 +3322,26 @@ def test_grouped_auto_sizing_rule(spark, monkeypatch):
             math.ceil(s2["est_bytes"] / (s1["est_bytes"] - 1)),
         )
         assert s2["n_chunks"] == expect, (s2, expect)
-        assert os.path.exists(f"{made[-1]}/cand"), (
-            "exact-census path must materialize candidates"
-        )
+        assert has(dirs, "cand"), "exact-census path must materialize candidates"
+        # one exact-census chunk returns the lazy verify frame over the
+        # materialized scratch: no chunk is written
+        assert has(dirs, "out") == (s2["n_chunks"] > 1), s2
 
         # rung 3: budget ~1/3 of the exact estimate -> >= 3 chunks
         budget = s2["est_bytes"] // 3 + 1
         spark.conf.set(D.GROUPED_SCRATCH_BUDGET_CONF, str(budget))
-        n_tiny = D.grouped_exact_join(spark, docs, "q49c").count()
-        s3 = dict(D.LAST_GROUPED_SIZING)
+        n_tiny, s3, dirs = grouped()
         assert s3["est_rows"] == s2["est_rows"], "estimate must be deterministic"
         expect = min(D.GROUPED_MAX_CHUNKS, math.ceil(s3["est_bytes"] / budget))
         assert s3["n_chunks"] == expect >= 3, (s3, expect)
-        assert n_exact == n_huge and n_tiny == n_huge
+        assert has(dirs, "out")
+
+        # a forced call right after an auto one reports its own decision
+        monkeypatch.setenv("SPARK_GRAFT_GROUPED_CHUNKS", "2")
+        n_forced, s4, _ = grouped()
+        assert s4["mode"] == "forced" and s4["n_chunks"] == 2, s4
+        assert s4["est_rows"] is None and s4["budget_bytes"] is None, s4
+        assert n_one == n_huge == n_exact == n_tiny == n_forced
     finally:
         spark.conf.unset(D.GROUPED_SCRATCH_BUDGET_CONF)
 
@@ -3350,13 +3381,15 @@ def test_grouped_scratch_encryption_boundary(spark, monkeypatch):
         )
 
     docs = load(spark, SF, "documents")
-    plain_rows = canon(D.grouped_exact_join(spark, docs, "q49c"))
+    plain_rows = canon(D.grouped_exact_join(spark, docs, "q49c")[0])
     assert plain_rows, "fixture has no pairs — test is vacuous"
     work_plain = made[-1]
     toks = spark.read.parquet(f"{work_plain}/toks")  # plaintext by contract
     assert "tok" in toks.columns and toks.count() > 0
 
-    enc_rows = canon(D.grouped_exact_join(spark, docs, "q49c", encrypt_scratch=True))
+    enc_rows = canon(
+        D.grouped_exact_join(spark, docs, "q49c", encrypt_scratch=True)[0]
+    )
     assert enc_rows == plain_rows
     work_enc = made[-1]
     with pytest.raises(Exception, match="(?i)unwrap|denied|authoriz|403|key"):
@@ -3365,6 +3398,24 @@ def test_grouped_scratch_encryption_boundary(spark, monkeypatch):
         ).collect()
     ok = read_encrypted(spark, f"{work_enc}/toks", token="CONFIDENTIAL")
     assert ok.count() == toks.count()
+
+    # the encrypted ONE-chunk path (bound prescreen, decrypt pins held):
+    # the chunk loop writes the single chunk and releases every pin
+    # before returning, so the call leaves no cached RDD behind
+    def cached_rdds():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    monkeypatch.delenv("SPARK_GRAFT_GROUPED_CHUNKS")
+    spark.conf.set(D.GROUPED_SCRATCH_BUDGET_CONF, str(1 << 60))
+    try:
+        before = cached_rdds()
+        frame, sizing = D.grouped_exact_join(spark, docs, "q49c", encrypt_scratch=True)
+        leaked = cached_rdds() - before
+    finally:
+        spark.conf.unset(D.GROUPED_SCRATCH_BUDGET_CONF)
+    assert sizing["mode"] == "bound_prescreen" and sizing["n_chunks"] == 1, sizing
+    assert not leaked, f"pins left cached: {leaked}"
+    assert canon(frame) == plain_rows
 
 
 def test_q55_budget_ladder_engine_oracle_agree():
