@@ -275,28 +275,26 @@ def q60d_encrypted_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous ENCRYPTED ingestion: the documents corpus arrives as
     three micro-batches through Structured Streaming's foreachBatch and
     each batch lands directly as PME-encrypted parquet (the reference's
-    write path made continuous — plaintext never touches the sink). A
-    decrypting union over the batch directories then aggregates per
+    write path made continuous — plaintext never touches the sink). One
+    decrypting scan over all batch directories then aggregates per
     source; the oracle aggregates the plaintext table, so equality proves
     the streaming-encrypt-decrypt round trip is lossless across batch
     boundaries (streaming/ingest.py::encrypted_stream_ingest).
 
     Scale shape: per-batch encryption is partition-parallel inside
     foreachBatch; KMS load is wraps per file x key-id per batch, not per
-    row. The batch-directory union is bounded by micro-batch count."""
+    row."""
     prep(spark)
     from parquet_modular_encryption_spark.crypto.policy import DOCUMENTS_POLICY
-    from parquet_modular_encryption_spark.streaming.ingest import (
-        encrypted_stream_ingest,
-        read_encrypted_batches,
-    )
+    from parquet_modular_encryption_spark.sources.encrypted import read_encrypted
+    from parquet_modular_encryption_spark.streaming.ingest import encrypted_stream_ingest
 
     scratch = scratch_dir("pme_q60d_")
     src = f"{scratch}/arrivals"
     load(spark, sf_dir, "documents").repartition(3).write.mode("overwrite").parquet(src)
     out = f"{scratch}/encrypted_corpus"
     encrypted_stream_ingest(spark, src, out, DOCUMENTS_POLICY)
-    dec = read_encrypted_batches(spark, out, token="RESTRICTED")
+    dec = read_encrypted(spark, out, token="RESTRICTED")
     return dec.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("total_chars"),

@@ -11,7 +11,9 @@ read_encrypted_parquet.py) as distributed Spark operators:
   (write_encrypted_parquet.py:67-87,23-25).
 - ``read_encrypted``: schema comes from the plaintext footer with NO key
   (the reference's "partial protection" mode, README.md:49-54), then each
-  executor task decrypts its share of files with a per-task KMS client and
+  executor task decrypts its share of the part files under the path
+  (subdirectories included, so a streamed lake's ``batch_id=N/``
+  directories are one scan) with a per-task KMS client and
   60 s unwrapped-key cache (read_encrypted_parquet.py:28-39,36). Projection
   is pushed into the Arrow scanner, so unread encrypted columns are never
   decrypted — the reference's least-privilege projection
@@ -203,6 +205,25 @@ def write_encrypted(
     return len(manifest)
 
 
+def _decrypting_format(kms_url: str, token: str | None) -> pads.ParquetFileFormat:
+    """Arrow dataset format that decrypts with ``token``'s KMS privileges."""
+    from parquet_modular_encryption_spark.crypto.kms_client import (
+        connection_config,
+        crypto_factory,
+    )
+
+    decryption = pads.ParquetDecryptionConfig(
+        crypto_factory(),
+        connection_config(kms_url, token),
+        pe.DecryptionConfiguration(cache_lifetime=CACHE_LIFETIME),
+    )
+    return pads.ParquetFileFormat(
+        default_fragment_scan_options=pads.ParquetFragmentScanOptions(
+            decryption_config=decryption
+        )
+    )
+
+
 def read_encrypted(
     spark: SparkSession,
     path: str,
@@ -214,11 +235,24 @@ def read_encrypted(
     key needed), file-granular parallel decryption on executors, projection
     pushed into the Arrow scanner. Encrypted-footer files (PARE magic) fall
     back to a driver-side decrypting schema read — one KMS unwrap of the
-    footer key, still no data scanned."""
+    footer key, still no data scanned.
+
+    Every ``*.parquet`` file under ``path`` is read, in subdirectories too
+    (the ``batch_id=N/`` directories of
+    ``streaming/ingest.py::encrypted_stream_ingest`` become one scan).
+    Files and directories whose names start with ``_`` or ``.`` are
+    skipped, as Spark skips them (the sink's ``_checkpoint/``); a
+    directory holding no such file contributes zero rows."""
     kms_url = _resolve_kms_url(spark, kms_url)
-    files = sorted(
-        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
-    )
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        files += [
+            os.path.join(root, f)
+            for f in names
+            if f.endswith(".parquet") and not f.startswith(("_", "."))
+        ]
+    files.sort()
     if not files:
         raise FileNotFoundError(f"no parquet files under {path}")
 
@@ -237,16 +271,7 @@ def read_encrypted(
     cols = list(columns) if columns else None
 
     def read_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        decryption = pads.ParquetDecryptionConfig(
-            _crypto_factory_for_tasks(),
-            _connection_config_for_tasks(kms_url, token),
-            pe.DecryptionConfiguration(cache_lifetime=CACHE_LIFETIME),
-        )
-        fmt = pads.ParquetFileFormat(
-            default_fragment_scan_options=pads.ParquetFragmentScanOptions(
-                decryption_config=decryption
-            )
-        )
+        fmt = _decrypting_format(kms_url, token)
         for batch in batches:
             for fname in batch.column("file").to_pylist():
                 dataset = pads.dataset(fname, format=fmt)
@@ -259,18 +284,6 @@ def read_encrypted(
         min(len(files), 64)
     )
     return file_df.mapInArrow(read_files, spark_schema)
-
-
-def _crypto_factory_for_tasks():
-    from parquet_modular_encryption_spark.crypto.kms_client import crypto_factory
-
-    return crypto_factory()
-
-
-def _connection_config_for_tasks(kms_url: str, token: str | None):
-    from parquet_modular_encryption_spark.crypto.kms_client import connection_config
-
-    return connection_config(kms_url, token)
 
 
 def _spark_schema_from_arrow(spark: SparkSession, arrow_schema: pa.Schema):
@@ -289,17 +302,7 @@ def read_encrypted_arrow(
     from parquet_modular_encryption_spark.crypto.kms_server import shared_kms_url
 
     kms_url = kms_url or shared_kms_url()
-    decryption = pads.ParquetDecryptionConfig(
-        _crypto_factory_for_tasks(),
-        _connection_config_for_tasks(kms_url, token),
-        pe.DecryptionConfiguration(cache_lifetime=CACHE_LIFETIME),
-    )
-    fmt = pads.ParquetFileFormat(
-        default_fragment_scan_options=pads.ParquetFragmentScanOptions(
-            decryption_config=decryption
-        )
-    )
-    dataset = pads.dataset(path, format=fmt)
+    dataset = pads.dataset(path, format=_decrypting_format(kms_url, token))
     return dataset.scanner(columns=columns).to_table()
 
 

@@ -168,7 +168,10 @@ def encrypted_stream_ingest(
     idempotency contract as :func:`incremental_dedup_ingest` (AES-GCM
     uses random IVs, so replayed ciphertext differs byte-wise while the
     plaintext content is identical; idempotency is at the row level,
-    which is the level the readers see).
+    which is the level the readers see). A batch with no rows leaves an
+    empty directory. The reader of the lake is one
+    ``sources.encrypted.read_encrypted(spark, out_dir, ...)`` scan over
+    every batch directory (it skips the default ``_checkpoint/``).
 
     Scale shape: encryption cost is per-partition and embarrassingly
     parallel; KMS load is one wrap per file x key-id per batch (double
@@ -203,31 +206,3 @@ def encrypted_stream_ingest(
         q.processAllAvailable()
     finally:
         q.stop()
-
-
-def read_encrypted_batches(
-    spark: SparkSession,
-    out_dir: str,
-    token: str | None = None,
-    kms_url: str | None = None,
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """Decrypting union over every ``batch_id=N`` directory written by
-    :func:`encrypted_stream_ingest`. The directory list is driver-side but
-    bounded by micro-batch count (not data volume); each directory's scan
-    is the fully distributed ``read_encrypted``."""
-    from functools import reduce
-
-    from parquet_modular_encryption_spark.sources.encrypted import read_encrypted
-
-    subs = sorted(
-        d for d in os.listdir(out_dir) if d.startswith("batch_id=")
-    )
-    if not subs:
-        raise FileNotFoundError(f"no batch_id=* directories under {out_dir}")
-    frames = [
-        read_encrypted(spark, f"{out_dir}/{d}", token=token, kms_url=kms_url,
-                       columns=columns)
-        for d in subs
-    ]
-    return reduce(DataFrame.unionByName, frames)

@@ -290,81 +290,6 @@ def stream_static_enrich(
     return events_stream.join(F.broadcast(dim), on)
 
 
-def run_foreach_batch_encrypted(
-    df: DataFrame,
-    out_dir: str,
-    policy,
-    kms_url: str,
-    checkpoint: str | None = None,
-) -> None:
-    """Streaming ingestion into an ENCRYPTED parquet lake: foreachBatch ×
-    parquet modular encryption. Each micro-batch is written with
-    :func:`~parquet_modular_encryption_spark.sources.encrypted.write_encrypted`
-    — per-column keys, zstd-19, DataPage v2, exactly as the batch sink —
-    into a batch_id-stamped subdirectory, so restarts overwrite their own
-    batch (idempotent replay, same contract as run_foreach_batch_upsert)
-    and the at-rest policy holds from the FIRST byte ever persisted: no
-    plaintext staging area, no re-encrypt backfill. Reads go through
-    read_encrypted with the usual token gating, so a streaming pipeline
-    gets the identical least-privilege column access as batch (the
-    composition the reference's design implies but never exercises —
-    reference README.md:44, encryption is type- and writer-agnostic)."""
-    from parquet_modular_encryption_spark.sources.encrypted import write_encrypted
-
-    def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():  # a trigger with no new files emits no dir
-            return
-        write_encrypted(
-            batch_df.withColumn("__batch_id", F.lit(batch_id)),
-            f"{out_dir}/batch_id={batch_id}",
-            policy,
-            kms_url=kms_url,
-        )
-
-    writer = df.writeStream.outputMode("append").foreachBatch(per_batch)
-    if checkpoint:
-        # exactly-once across restarts: committed batches are never
-        # re-emitted; an in-flight batch replays under its own batch_id
-        # and overwrites its own directory
-        writer = writer.option("checkpointLocation", checkpoint)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
-def read_encrypted_stream_output(
-    spark: SparkSession,
-    out_dir: str,
-    token: str | None,
-    kms_url: str,
-    columns: list[str] | None = None,
-) -> DataFrame:
-    """Decrypting read over every batch directory the encrypted streaming
-    sink produced (token-gated column access per crypto/policy.py).
-    ``columns`` prunes the projection at scan construction — the
-    least-privilege pattern: a low-privilege token reads the plaintext
-    columns it is entitled to by never materializing the encrypted ones."""
-    import os
-
-    from parquet_modular_encryption_spark.sources.encrypted import read_encrypted
-
-    batches = sorted(
-        d for d in os.listdir(out_dir) if d.startswith("batch_id=")
-    )
-    parts = [
-        read_encrypted(
-            spark, f"{out_dir}/{d}", token=token, kms_url=kms_url, columns=columns
-        )
-        for d in batches
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def ohlc_bars_stream(
     events: DataFrame, window: str = "1 hour", watermark: str | None = None
 ) -> DataFrame:

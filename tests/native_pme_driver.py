@@ -269,15 +269,11 @@ def main() -> None:
         import shutil
 
         import pyarrow.parquet as pq
-        import pyarrow.parquet.encryption as pe
 
         from parquet_modular_encryption_spark.sources import encrypted as enc
 
         native_files = sorted(glob.glob(f"{scratch}/native/*.parquet"))
-        props = enc._crypto_factory_for_tasks().file_decryption_properties(
-            enc._connection_config_for_tasks(kms_url, "RESTRICTED"),
-            pe.DecryptionConfiguration(cache_lifetime=enc.CACHE_LIFETIME),
-        )
+        props = enc._file_decryption_properties(kms_url, "RESTRICTED")
         rg = pq.ParquetFile(
             native_files[0], decryption_properties=props
         ).metadata.row_group(0)
@@ -478,10 +474,7 @@ def main() -> None:
             for crc in glob.glob(f"{scratch}/{sub}/.*.crc"):
                 _os.remove(crc)
             tfile = glob.glob(f"{scratch}/{sub}/*.parquet")[0]
-            props_t = enc._crypto_factory_for_tasks().file_decryption_properties(
-                enc._connection_config_for_tasks(kms_url, "RESTRICTED"),
-                pe.DecryptionConfiguration(cache_lifetime=enc.CACHE_LIFETIME),
-            )
+            props_t = enc._file_decryption_properties(kms_url, "RESTRICTED")
             rg_t = pq.ParquetFile(
                 tfile, decryption_properties=props_t
             ).metadata.row_group(0)

@@ -375,8 +375,6 @@ def test_gcm_tamper_detection(spark, people_path, tmp_path):
     import glob
     import shutil
 
-    import pyarrow.parquet.encryption as pe
-
     from parquet_modular_encryption_spark.crypto.kms_server import shared_kms_url
     from parquet_modular_encryption_spark.sources import encrypted as enc
 
@@ -385,10 +383,7 @@ def test_gcm_tamper_detection(spark, people_path, tmp_path):
     victim_src = src[0]
 
     # authorized metadata read -> the CONFIDENTIAL column's byte range
-    props = enc._crypto_factory_for_tasks().file_decryption_properties(
-        enc._connection_config_for_tasks(shared_kms_url(), "RESTRICTED"),
-        pe.DecryptionConfiguration(cache_lifetime=enc.CACHE_LIFETIME),
-    )
+    props = enc._file_decryption_properties(shared_kms_url(), "RESTRICTED")
     rg = pq.ParquetFile(victim_src, decryption_properties=props).metadata.row_group(0)
     ssn = next(
         rg.column(i)

@@ -384,11 +384,12 @@ def test_drop_duplicates_within_watermark_bounded_retention(spark, tmp_path):
 
 
 def test_encrypted_streaming_sink_roundtrip_and_gating(spark, tmp_path):
-    """Streaming × PME composition: micro-batches land ENCRYPTED (per-column
+    """Streaming x PME composition: micro-batches land ENCRYPTED (per-column
     keys) via foreachBatch; a RESTRICTED read recovers exactly the source
-    rows, a PUBLIC token is denied the CONFIDENTIAL column, and re-running
-    the query (restart without checkpoint → batch ids restart at 0)
-    overwrites its own batch dirs — idempotent, no duplicates."""
+    rows in ONE decrypting scan over every batch dir, a PUBLIC token is
+    denied the CONFIDENTIAL column, and re-running the query with a fresh
+    checkpoint (batch ids restart at 0) overwrites its own batch dirs —
+    idempotent, no duplicates."""
     import pytest as _pytest
 
     from parquet_modular_encryption_spark.crypto.kms_server import KmsServer
@@ -396,10 +397,8 @@ def test_encrypted_streaming_sink_roundtrip_and_gating(spark, tmp_path):
         EncryptionPolicy,
         Privilege,
     )
-    from parquet_modular_encryption_spark.streaming.windows import (
-        read_encrypted_stream_output,
-        run_foreach_batch_encrypted,
-    )
+    from parquet_modular_encryption_spark.sources.encrypted import read_encrypted
+    from parquet_modular_encryption_spark.streaming.ingest import encrypted_stream_ingest
 
     src = str(tmp_path / "src")
     out = str(tmp_path / "enc_lake")
@@ -412,11 +411,11 @@ def test_encrypted_streaming_sink_roundtrip_and_gating(spark, tmp_path):
         "event_id bigint, ts timestamp, user_id bigint, "
         "event_type string, value double, props string",
     ).withColumn("ts", F.unix_micros("ts") * 1000).repartition(3).write.parquet(src)
-    # exactly 3 non-empty source files: with max_files_per_trigger=1 every
-    # batch id 0..2 then writes a directory. Without the repartition,
-    # createDataFrame parallelizes over all cores and parquet emits EMPTY
-    # part files, whose batches the sink's isEmpty guard skips — which
-    # batch ids materialize then depends on file listing order (flaky).
+    want = sorted((i, 100 + i, float(i)) for i in range(3))
+
+    def lake_rows(url):
+        got = read_encrypted(spark, out, token="RESTRICTED", kms_url=url)
+        return sorted((r.event_id, r.user_id, r.value) for r in got.collect())
 
     policy = EncryptionPolicy(
         column_levels={"value": Privilege.CONFIDENTIAL, "user_id": Privilege.INTERNAL}
@@ -424,29 +423,41 @@ def test_encrypted_streaming_sink_roundtrip_and_gating(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     with KmsServer() as url:
         for _run in range(2):  # second run = checkpointed restart: no re-emit
-            stream = stream_events(spark, src, max_files_per_trigger=1)
-            run_foreach_batch_encrypted(
-                stream, out, policy, kms_url=url, checkpoint=ckpt
+            encrypted_stream_ingest(
+                spark, src, out, policy, kms_url=url, checkpoint_dir=ckpt
             )
 
-        got = read_encrypted_stream_output(spark, out, "RESTRICTED", url)
-        data = {(r.event_id, r.user_id, r.value) for r in got.collect()}
-        assert data == {(i, 100 + i, float(i)) for i in range(3)}
+        assert lake_rows(url) == want
+
+        # the lake read is one scan, not a union of per-batch scans
+        plan = (
+            read_encrypted(spark, out, token="RESTRICTED", kms_url=url)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert plan.count("MapInArrow") == 1 and "Union" not in plan, plan
 
         # on-disk ciphertext: a plain (keyless) parquet read of any batch
         # dir must fail to materialize the encrypted column
         with _pytest.raises(Exception):
             spark.read.parquet(f"{out}/batch_id=0").select("value").collect()
 
-        pub = read_encrypted_stream_output(spark, out, "PUBLIC", url)
+        pub = read_encrypted(spark, out, token="PUBLIC", kms_url=url)
         with _pytest.raises(Exception):
             pub.select("value").collect()
         # PUBLIC reads plaintext columns via scan-time projection (the
         # least-privilege pattern: encrypted columns never materialize)
-        pub_cols = read_encrypted_stream_output(
-            spark, out, "PUBLIC", url, columns=["event_id"]
+        pub_cols = read_encrypted(
+            spark, out, token="PUBLIC", columns=["event_id"], kms_url=url
         )
         assert pub_cols.count() == 3
+
+        # fresh checkpoint: batch ids restart at 0 and each batch clears
+        # its own directory, so the lake still holds each row exactly once
+        encrypted_stream_ingest(
+            spark, src, out, policy, kms_url=url,
+            checkpoint_dir=str(tmp_path / "ckpt_fresh"),
+        )
+        assert lake_rows(url) == want
 
 
 def test_streaming_cms_sketch_equals_batch(spark, tmp_path):
@@ -521,11 +532,11 @@ def test_ohlc_stream_equals_batch(spark):
 def test_encrypted_stream_ingest(spark, tmp_path):
     """Streaming encrypted ingestion (streaming/ingest.py): documents
     arrive as three batch files; each micro-batch lands as PME-encrypted
-    parquet. The decrypted union equals the source exactly; the sink
+    parquet. The decrypted lake equals the source exactly; the sink
     bytes never contain the protected text; an under-privileged token
     cannot read the text column; resuming from the checkpoint with no
-    new files adds nothing, and a late-arriving file adds exactly its
-    rows — encrypted like the rest."""
+    new files adds nothing, a zero-row file adds nothing, and a
+    late-arriving file adds exactly its rows — encrypted like the rest."""
     import glob
     import os
     import time
@@ -534,10 +545,8 @@ def test_encrypted_stream_ingest(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from parquet_modular_encryption_spark.crypto.policy import DOCUMENTS_POLICY
-    from parquet_modular_encryption_spark.streaming.ingest import (
-        encrypted_stream_ingest,
-        read_encrypted_batches,
-    )
+    from parquet_modular_encryption_spark.sources.encrypted import read_encrypted
+    from parquet_modular_encryption_spark.streaming.ingest import encrypted_stream_ingest
 
     src = tmp_path / "arrivals"
     out = str(tmp_path / "enc_corpus")
@@ -566,24 +575,30 @@ def test_encrypted_stream_ingest(spark, tmp_path):
     samples = [t[:40].encode() for t in table.column("text").to_pylist()[:5]]
     assert all(s not in raw for s in samples)
 
-    # decrypted union == source, row-exact
+    # decrypted lake == source, row-exact
     got = sorted(
         tuple(r)
-        for r in read_encrypted_batches(spark, out, token="RESTRICTED").collect()
+        for r in read_encrypted(spark, out, token="RESTRICTED").collect()
     )
     want = sorted(tuple(r.values()) for r in table.to_pylist())
     assert got == want
 
     # least privilege: PUBLIC token cannot project the CONFIDENTIAL text
     with pytest.raises(Exception, match="(?i)unwrap|denied|authoriz|403"):
-        read_encrypted_batches(
+        read_encrypted(
             spark, out, token="PUBLIC", columns=["doc_id", "text"]
         ).collect()
 
     # checkpoint resume with nothing new: no-op (same batch dirs, same rows)
     encrypted_stream_ingest(spark, str(src), out, DOCUMENTS_POLICY)
     assert sorted(d for d in os.listdir(out) if d.startswith("batch_id=")) == batch_dirs
-    assert len(read_encrypted_batches(spark, out, token="RESTRICTED").collect()) == n
+    assert len(read_encrypted(spark, out, token="RESTRICTED").collect()) == n
+
+    # zero-row arrival: its batch leaves an empty batch dir, read as no rows
+    pq.write_table(table.slice(0, 0), src / "500.parquet")
+    encrypted_stream_ingest(spark, str(src), out, DOCUMENTS_POLICY)
+    assert os.listdir(f"{out}/batch_id=3") == []
+    assert read_encrypted(spark, out, token="RESTRICTED").count() == n
 
     # late arrival: one novel document, encrypted like the rest
     novel = pa.table(
@@ -597,7 +612,7 @@ def test_encrypted_stream_ingest(spark, tmp_path):
     ).select(table.schema.names)
     pq.write_table(novel, src / "900.parquet")
     encrypted_stream_ingest(spark, str(src), out, DOCUMENTS_POLICY)
-    got2 = read_encrypted_batches(spark, out, token="RESTRICTED")
+    got2 = read_encrypted(spark, out, token="RESTRICTED")
     assert got2.count() == n + 1
     raw2 = b"".join(
         open(f, "rb").read()
@@ -731,7 +746,7 @@ def test_incremental_dedup_ingest_crash_replay(spark, tmp_path):
 def test_encrypted_stream_ingest_crash_replay(spark, tmp_path):
     """q60d's crash contract: a batch whose ciphertext landed but whose
     offset never committed is re-encrypted from scratch on restart
-    (overwrite-own-directory idempotency), and the final decrypted union
+    (overwrite-own-directory idempotency), and the final decrypted lake
     equals an uninterrupted run row-for-row — with every batch readable
     through the decrypting path (no half-written ciphertext survives)."""
     import os
@@ -740,10 +755,8 @@ def test_encrypted_stream_ingest_crash_replay(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from parquet_modular_encryption_spark.crypto.policy import DOCUMENTS_POLICY
-    from parquet_modular_encryption_spark.streaming.ingest import (
-        encrypted_stream_ingest,
-        read_encrypted_batches,
-    )
+    from parquet_modular_encryption_spark.sources.encrypted import read_encrypted
+    from parquet_modular_encryption_spark.streaming.ingest import encrypted_stream_ingest
 
     src = tmp_path / "arrivals"
     os.makedirs(src)
@@ -776,7 +789,7 @@ def test_encrypted_stream_ingest_crash_replay(spark, tmp_path):
     ) == ["batch_id=0", "batch_id=1", "batch_id=2"]
     got = sorted(
         tuple(r)
-        for r in read_encrypted_batches(spark, out, token="RESTRICTED").collect()
+        for r in read_encrypted(spark, out, token="RESTRICTED").collect()
     )
     want = sorted(tuple(r.values()) for r in table.to_pylist())
     assert got == want
