@@ -243,7 +243,7 @@ def _cell_score_batches(cells, ces, cell_arrow, it, max_out_rows=None):
         nbs = np.sqrt(nb)
     else:
         nbs = np.zeros(K)
-    cells_np = list(cells)
+    cells_np = np.asarray(cells)
     for batch in it:
         n = batch.num_rows
         if n == 0 or not K:
@@ -280,14 +280,7 @@ def _cell_score_batches(cells, ces, cell_arrow, it, max_out_rows=None):
                 yield pa.RecordBatch.from_arrays(
                     [
                         pa.array(np.tile(vid, c), type=pa.int64()),
-                        pa.array(
-                            [
-                                v
-                                for k in range(k0, k0 + c)
-                                for v in [cells_np[k]] * n
-                            ],
-                            type=cell_arrow,
-                        ),
+                        pa.array(np.repeat(cells_np[k0 : k0 + c], n), type=cell_arrow),
                         pa.array(
                             cos_flat,
                             type=pa.float64(),
@@ -2322,10 +2315,11 @@ def q55b_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`semdedup_subbits`. Total pairs are then <= n * TARGET — linear
     in corpus size; b = 0 at small scale, so the operator is unchanged
     where the old one was already cheap. Pair generation still routes
-    through ``salted_block_self_join`` on the (cell, subcell) key
-    carrying ids ONLY — a hot sub-cell fragments over the reducer grid,
-    and the wide embedding arrays join back AFTER candidate generation
-    (q59b's ship-ids-not-payloads discipline). The (vec_id, cell,
+    through ``salted_block_self_join`` (a thin caller of the engine's one
+    fragment-replication core, ``salted_hot_feature_join``) on the
+    (cell, subcell) key carrying ids ONLY — a hot sub-cell fragments
+    over the reducer grid, and the wide embedding arrays join back AFTER
+    candidate generation (q59b's ship-ids-not-payloads discipline). The (vec_id, cell,
     subcell) assignment is localCheckpointed: consumed by both join
     sides and the final flag join, three fixed-width columns at any
     scale — the (refined) IVF inverted list itself.
@@ -2362,7 +2356,7 @@ def q55b_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = salted_block_self_join(
         assign, ("cell", "subcell"), id_col="vec_id", out_a="vec_a", out_b="vec_b"
-    )
+    )[0]
     ea = e.select(F.col("vec_id").alias("vec_a"), F.col("ee").alias("va"))
     eb = e.select(F.col("vec_id").alias("vec_b"), F.col("ee").alias("vb"))
     dup = (

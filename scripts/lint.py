@@ -106,6 +106,34 @@ def _scan_unreleased_pins(src: str) -> list[int]:
     ]
 
 
+#: A module-level ``LAST_*`` global holding an operator's most recent
+#: decision (grid, sizing) is shared by every caller on every thread, so
+#: a concurrent or later call silently overwrites what an earlier one
+#: reads. Operators return their decision records as values instead
+#: (``grouped_exact_join`` -> ``(frame, sizing)``,
+#: ``salted_hot_feature_join`` -> ``(frame, grid)``).
+DECISION_GLOBAL = r"LAST_[A-Z0-9_]*"
+
+
+def _scan_decision_globals(src: str) -> list[int]:
+    """Lines (1-based) of module-level assignments to a ``LAST_*`` name."""
+    import ast
+    import re
+
+    lines = []
+    for node in ast.parse(src).body:
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, (ast.AnnAssign, ast.AugAssign)):
+            targets = [node.target]
+        else:
+            continue
+        names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
+        if any(re.fullmatch(DECISION_GLOBAL, n) for n in names):
+            lines.append(node.lineno)
+    return lines
+
+
 def scan_antipatterns() -> list[str]:
     import re
 
@@ -123,6 +151,11 @@ def scan_antipatterns() -> list[str]:
                     rel = os.path.relpath(path, REPO)
                     findings.append(f"{rel}:{line}: {why}")
             rel = os.path.relpath(path, REPO)
+            for line in _scan_decision_globals(src):
+                findings.append(
+                    f"{rel}:{line}: module-level LAST_* decision global — "
+                    "return the decision record with the frame instead."
+                )
             for line in _scan_unreleased_pins(src):
                 findings.append(
                     f"{rel}:{line}: .persist()/.cache() with no unpersist "

@@ -151,7 +151,7 @@ def candidate_counts(spark, sf_dir: str, have: dict | None = None) -> dict:
     if "q47b_band_candidates_raw" not in out:
         # q47b: LSH band-bucket candidates (pre- and post-distinct)
         _, bands = minhash_bands(docs)
-        raw = banded_pairs_salted(bands)
+        raw = banded_pairs_salted(bands)[0]
         out["q47b_band_candidates_raw"] = raw.count()
         out["q47b_band_candidates_distinct"] = raw.distinct().count()
 

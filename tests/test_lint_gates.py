@@ -118,6 +118,31 @@ def test_nested_tokens_regex_fires():
     assert not re.search(pat, "shingles_from(F.col('toks'), 5)")
 
 
+# ------------------------------------------------- decision globals
+
+
+def test_decision_global_scanner_fires_on_module_level_last():
+    src = (
+        "from x import y\n"
+        "LAST_X: dict = {}\n"
+        "LAST_GRID = {}\n"
+        "LAST_N += 1\n"
+    )
+    assert lint._scan_decision_globals(src) == [2, 3, 4]
+
+
+def test_decision_global_scanner_ignores_locals_and_other_names():
+    src = (
+        "PAIR_GRID = 4\n"
+        "LAST = 1\n"
+        "def f():\n"
+        "    LAST_X = {}\n"
+        "    return LAST_X\n"
+        "doc = 'LAST_X: dict = {}'\n"
+    )
+    assert lint._scan_decision_globals(src) == []
+
+
 # ------------------------------------------------------ package clean
 
 

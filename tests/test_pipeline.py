@@ -393,7 +393,7 @@ def test_salted_banded_pairs_equal_plain_on_skew(spark):
     bands = spark.createDataFrame(rows, "doc_id bigint, band_id int, band_key string")
 
     plain = sorted(map(tuple, banded_pairs(bands).distinct().collect()))
-    salted = sorted(map(tuple, banded_pairs_salted(bands).distinct().collect()))
+    salted = sorted(map(tuple, banded_pairs_salted(bands)[0].distinct().collect()))
     assert plain == salted
     assert len(plain) >= hot_n * (hot_n - 1) // 2  # hot bucket contributed
 
@@ -588,7 +588,7 @@ def test_salted_block_self_join_equal_plain_on_hot_block(spark):
     got = sorted(
         map(
             tuple,
-            salted_block_self_join(df, ("source", "len_bucket"), id_col="doc_id")
+            salted_block_self_join(df, ("source", "len_bucket"), id_col="doc_id")[0]
             .collect(),
         )
     )
@@ -652,7 +652,7 @@ def test_q59b_hot_prefix_block(spark):
     prefixes = canon.select(
         "doc_id", F.substring("norm", 1, LEV_PREFIX).alias("prefix")
     )
-    pairs = salted_block_self_join(blocked, ("lang", "block"), id_col="doc_id")
+    pairs = salted_block_self_join(blocked, ("lang", "block"), id_col="doc_id")[0]
     salted = sorted(
         (r.doc_a, r.doc_b, r.edit_dist)
         for r in pairs.join(
@@ -3075,13 +3075,28 @@ def test_salted_grid_auto_sizing(spark):
     -> 128; cap at 256). The grid is physical only, so the adaptive
     choice must leave the pair set exactly equal to the plain join's —
     asserted on a planted hot-bucket frame big enough to force g = 8,
-    with the decision recorded. The per-block SQL mirror must agree
-    with the Python rule at every boundary."""
+    with the decision read from the call's returned grid record. The
+    one column rule must match the closed form at every boundary."""
     from pyspark.sql import functions as F
 
     from parquet_modular_encryption_spark.pipeline import dedup as D
 
-    assert [D._auto_grid(k) for k in (0, 1018, 2980, 6143, 50_000, 10**6)] == [
+    def expected_grid(k):  # the rule's block form: smallest g with k <= 500g
+        g = D.PAIR_GRID
+        while g < D.PAIR_GRID_MAX and k > 500 * g:
+            g *= 2
+        return g
+
+    def rule(ks):  # the engine's one column rule on k-member blocks (k² pairs)
+        got = (
+            spark.createDataFrame([(k,) for k in ks], "k long")
+            .select("k", D._grid_expr(F.col("k") * F.col("k")).alias("g"))
+            .collect()
+        )
+        return {r.k: r.g for r in got}
+
+    calib = rule((0, 1018, 2980, 6143, 50_000, 10**6))
+    assert [calib[k] for k in (0, 1018, 2980, 6143, 50_000, 10**6)] == [
         4, 4, 8, 16, 128, 256,
     ]
 
@@ -3095,19 +3110,14 @@ def test_salted_grid_auto_sizing(spark):
     assert D._parallelism_grid_cap(1) == 16
     assert D._parallelism_grid_cap(500_000) == D.PAIR_GRID_MAX
 
-    # engine-side per-block mirror == the Python rule, swept across every
-    # power-of-two boundary +-1 (k <= 500g is the integer-exact form)
+    # the column rule == the closed form, swept across every power-of-two
+    # boundary +-1 (k <= 500g is the integer-exact form)
     probes = sorted(
         {1, 2, D.HOT_BUCKET_THRESHOLD + 1}
         | {500 * g + d for g in (4, 8, 16, 32, 64, 128, 256) for d in (-1, 0, 1)}
         | {10**6}
     )
-    got = (
-        spark.createDataFrame([(n,) for n in probes], "n long")
-        .select("n", D._auto_grid_expr(F.col("n")).alias("g"))
-        .collect()
-    )
-    assert {r.n: r.g for r in got} == {n: D._auto_grid(n) for n in probes}
+    assert rule(probes) == {k: expected_grid(k) for k in probes}
 
     # one hot bucket of 2,400 members forces g = 8: per-cell pair work on
     # the 4x4 floor is (2400/4)^2 = 360k > PAIR_CELL_TARGET (250k), and
@@ -3120,13 +3130,12 @@ def test_salted_grid_auto_sizing(spark):
     plain = {
         (r.doc_a, r.doc_b) for r in D.banded_pairs(bands).distinct().collect()
     }
-    salted = {
-        (r.doc_a, r.doc_b)
-        for r in D.banded_pairs_salted(bands).distinct().collect()
-    }
+    salted_df, grid = D.banded_pairs_salted(bands)
+    salted = {(r.doc_a, r.doc_b) for r in salted_df.distinct().collect()}
     cap = D._parallelism_grid_cap(spark.sparkContext.defaultParallelism)
-    assert D.LAST_SALTED_GRID == {
-        "k_max": 2400,
+    assert grid == {
+        "salted": True,
+        "max_right": 2400,
         "grid": min(8, cap),
         "grid_work": 8,
         "parallelism_cap": cap,
@@ -3138,10 +3147,10 @@ def test_salted_grid_over_cap_warns(spark):
     """The mega-block contract (VERDICT r12 #5): a block whose pair work
     exceeds the PAIR_CELL_TARGET even at the PAIR_GRID_MAX ceiling must
     raise a visible warning with the per-cell estimate and record the
-    clamp in LAST_SALTED_GRID — gridding distributes k^2 work, it cannot
-    shrink it, and a 100 TB pipeline must SEE degenerate blocks instead
-    of silently straggling. The warning fires at census/decision time
-    (driver-side), so asserting it does not require executing the
+    clamp in the call's grid record — gridding distributes k^2 work, it
+    cannot shrink it, and a 100 TB pipeline must SEE degenerate blocks
+    instead of silently straggling. The warning fires at census/decision
+    time (driver-side), so asserting it does not require executing the
     explosive join itself."""
     import warnings
 
@@ -3149,8 +3158,8 @@ def test_salted_grid_over_cap_warns(spark):
 
     from parquet_modular_encryption_spark.pipeline import dedup as D
 
-    k = 130_000  # _auto_grid clamps at 256 and (k/256)^2 > PAIR_CELL_TARGET
-    assert D._auto_grid(k) == D.PAIR_GRID_MAX
+    k = 130_000  # the rule clamps at 256 and (k/256)^2 > PAIR_CELL_TARGET
+    assert k > 500 * D.PAIR_GRID_MAX
     bands = spark.range(k).select(
         F.col("id").alias("doc_id"),
         F.lit(0).alias("band_id"),
@@ -3158,15 +3167,14 @@ def test_salted_grid_over_cap_warns(spark):
     )
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        D.banded_pairs_salted(bands)  # lazy: only the census job runs
+        _, g = D.banded_pairs_salted(bands)  # lazy: only the census job runs
     msgs = [str(w.message) for w in caught if "grid ceiling" in str(w.message)]
     assert msgs, "over-cap block did not warn"
     assert str(k) in msgs[0] and "pairs PER CELL" in msgs[0]
-    g = D.LAST_SALTED_GRID
     # the WORK rule hits the ceiling (the over-cap contract keys off it);
     # the APPLIED grid additionally respects the session parallelism cap
     cap = D._parallelism_grid_cap(spark.sparkContext.defaultParallelism)
-    assert g["k_max"] == k and g["grid_work"] == D.PAIR_GRID_MAX
+    assert g["max_right"] == k and g["grid_work"] == D.PAIR_GRID_MAX
     assert g["grid"] == min(D.PAIR_GRID_MAX, cap)
     assert g["clamped"] == 1
     assert g["est_cell_pairs"] == int((k / D.PAIR_GRID_MAX) ** 2) > D.PAIR_CELL_TARGET
@@ -3175,7 +3183,7 @@ def test_salted_grid_over_cap_warns(spark):
 def test_salted_hot_feature_join_equals_plain_join(spark):
     """r14: the bipartite hot-feature grid must be purely physical —
     identical row set to the plain key join with a planted hot key big
-    enough to force a real grid (threshold driven low), cold keys and
+    enough to force a real grid (hot_pairs driven low), cold keys and
     the union seam covered, and the no-hot-key census branch returning
     the plain join's rows too."""
     from parquet_modular_encryption_spark.pipeline import dedup as D
@@ -3194,8 +3202,8 @@ def test_salted_hot_feature_join_equals_plain_join(spark):
     salted = {
         tuple(r)
         for r in D.salted_hot_feature_join(
-            left, right, key="g", l_salt="doc_a", r_salt="doc_b", threshold=100
-        ).collect()
+            left, right, keys=["g"], l_salt="doc_a", r_salt="doc_b", hot_pairs=100
+        )[0].collect()
     }
     assert salted == plain and plain
 
@@ -3203,10 +3211,69 @@ def test_salted_hot_feature_join_equals_plain_join(spark):
     quiet = {
         tuple(r)
         for r in D.salted_hot_feature_join(
-            left, right, key="g", l_salt="doc_a", r_salt="doc_b", threshold=10**9
-        ).collect()
+            left, right, keys=["g"], l_salt="doc_a", r_salt="doc_b", hot_pairs=10**9
+        )[0].collect()
     }
     assert quiet == plain
+
+
+def test_salted_joins_builder_job_counts(spark):
+    """The fragment-replication core takes its plain-vs-salted choice,
+    grid record and over-cap check from ONE driver-side census action,
+    and skips even that when ``right_max`` already proves no key is hot
+    (builder-time jobs were 30% of the headline at the last profile).
+    Counted per call with a job group, on a frame with a hot block and on
+    one without: the self-join runs exactly its block census (1 job, as
+    it did when the census only fed a module global); the feature join
+    given right_max runs 0 jobs when right_max² <= hot_pairs and at most
+    1 otherwise (it ran 1 before the core was shared). AQE is off so one
+    action counts as one job, not one per materialized query stage."""
+    from parquet_modular_encryption_spark.pipeline import dedup as D
+
+    sc = spark.sparkContext
+
+    def jobs(build, group):
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    cold = [(1000 + i, 0, f"c{i // 3}") for i in range(90)]
+    hot = [(i, 0, "HOT") for i in range(60)] + cold
+    left = spark.createDataFrame(
+        [(a, "HOT") for a in range(40)] + [(100 + a, f"c{a % 5}") for a in range(20)],
+        "doc_a bigint, g string",
+    )
+    right = spark.createDataFrame(
+        [(b, "HOT") for b in range(1000, 1060)]
+        + [(2000 + b, f"c{b % 5}") for b in range(25)],
+        "doc_b bigint, g string",
+    )
+
+    def feature(hot_pairs):
+        return D.salted_hot_feature_join(
+            left, right, ["g"], "doc_a", "doc_b", hot_pairs=hot_pairs, right_max=60
+        )
+
+    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        counts = {}
+        for name, rows in (("hot", hot), ("cold", cold)):
+            bands = spark.createDataFrame(
+                rows, "doc_id bigint, band_id int, band_key string"
+            )
+            counts[f"self_{name}"] = jobs(
+                lambda: D.banded_pairs_salted(bands), f"salted-self-{name}"
+            )
+        counts["feature_quiet"] = jobs(lambda: feature(60 * 60), "salted-feature-quiet")
+        counts["feature_hot"] = jobs(lambda: feature(100), "salted-feature-hot")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
+    assert counts["self_hot"] == counts["self_cold"] == 1, counts
+    assert counts["feature_quiet"] == 0 and counts["feature_hot"] <= 1, counts
 
 
 def test_degenerate_block_filter_and_census(spark):
@@ -3237,7 +3304,7 @@ def test_degenerate_block_filter_and_census(spark):
     plain = {(r.doc_a, r.doc_b) for r in D.banded_pairs(bands).distinct().collect()}
     capped = {
         (r.doc_a, r.doc_b)
-        for r in D.banded_pairs_salted(kept).distinct().collect()
+        for r in D.banded_pairs_salted(kept)[0].distinct().collect()
     }
     assert capped < plain
     assert len(plain) - len(capped) == k * (k - 1) // 2  # closed-form mass
@@ -3296,7 +3363,8 @@ def test_grouped_auto_sizing_rule(spark, monkeypatch):
         n_one, s0, dirs = grouped(n_chunks=1)
         assert s0 == {
             "op": "q49c", "mode": "forced", "est_rows": None,
-            "est_bytes": None, "budget_bytes": None, "n_chunks": 1,
+            "est_bytes": None, "budget_bytes": None, "budget_source": None,
+            "n_chunks": 1,
         }, s0
         assert not has(dirs, "cand") and not has(dirs, "out"), (
             "a forced single chunk must skip every scratch write"
@@ -3306,7 +3374,7 @@ def test_grouped_auto_sizing_rule(spark, monkeypatch):
         n_huge, s1, dirs = grouped()
         assert s1["op"] == "q49c" and s1["mode"] == "bound_prescreen", s1
         assert s1["n_chunks"] == 1 and s1["est_rows"] > 0, s1
-        assert s1["budget_bytes"] == 1 << 60, s1
+        assert s1["budget_bytes"] == 1 << 60 and s1["budget_source"] == "conf", s1
         assert not has(dirs, "cand") and not has(dirs, "out"), (
             "bound path must skip every scratch materialization"
         )
@@ -3344,6 +3412,37 @@ def test_grouped_auto_sizing_rule(spark, monkeypatch):
         assert n_one == n_huge == n_exact == n_tiny == n_forced
     finally:
         spark.conf.unset(D.GROUPED_SCRATCH_BUDGET_CONF)
+
+
+def test_grouped_budget_ignores_free_disk(spark, monkeypatch):
+    """With no budget conf, the grouped sizing budget is a fraction of the
+    scratch filesystem's CAPACITY, not of its free space, so how full the
+    disk happens to be never picks q49c's sizing path. Two fill levels of
+    the same (faked) 1 TiB filesystem must give the same budget and the
+    same mode; free space alone would shrink the nearly-full budget to
+    1 KiB and force the exact census."""
+    import os
+    import types
+
+    from parquet_modular_encryption_spark.pipeline import dedup as D
+    from parquet_modular_encryption_spark.sources.datasets import load
+
+    monkeypatch.delenv("SPARK_GRAFT_GROUPED_CHUNKS", raising=False)
+    assert spark.conf.get(D.GROUPED_SCRATCH_BUDGET_CONF, None) is None
+    docs = load(spark, SF, "documents")
+    blocks = (1 << 40) // 4096
+    sizings = []
+    for free in (blocks, 1):  # an empty disk, then one free block left
+        st = types.SimpleNamespace(
+            f_bsize=4096, f_frsize=4096, f_blocks=blocks, f_bfree=free, f_bavail=free
+        )
+        monkeypatch.setattr(os, "statvfs", lambda path, st=st: st)
+        sizings.append(D.grouped_exact_join(spark, docs, "q49c")[1])
+    empty, full = sizings
+    budget = int((1 << 40) * D.GROUPED_SCRATCH_FRACTION)
+    assert empty["budget_bytes"] == full["budget_bytes"] == budget, sizings
+    assert empty["mode"] == full["mode"] == "bound_prescreen", sizings
+    assert empty["budget_source"] == full["budget_source"] == "disk_capacity"
 
 
 def test_grouped_scratch_encryption_boundary(spark, monkeypatch):

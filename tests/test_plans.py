@@ -606,10 +606,12 @@ def test_explosive_self_joins_pin_parallelism(spark, sf_dir):
 
     docs = load(spark, sf_dir, "documents")
     _, bands = minhash_bands(docs)
-    for builder in (banded_pairs, banded_pairs_salted):
-        df = builder(bands)
+    for name, df in (
+        ("banded_pairs", banded_pairs(bands)),
+        ("banded_pairs_salted", banded_pairs_salted(bands)[0]),
+    ):
         df.count()  # executed (AQE-final) plan, not the pre-execution guess
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "REPARTITION_BY_NUM" in plan, (
-            f"{builder.__name__} lost its explosive-join parallelism pin"
+            f"{name} lost its explosive-join parallelism pin"
         )
