@@ -449,36 +449,30 @@ def q66b_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Malformed-record ingestion modes (q39d)
 # ---------------------------------------------------------------------------
-_CSV_FIXTURE_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _malformed_csv_fixture(spark: SparkSession, sf_dir: str) -> str:
     """CSV shard with planted corruption: one good line per customer
     (c_custkey <= 150) plus one type-corrupt line per custkey % 10 == 0
     (unparseable bigint field). Derived from the customer table so the
-    oracle computes the planted counts from the same data."""
+    oracle computes the planted counts from the same data; built once
+    per session through ``scratch.session_fixture``."""
     import os
 
-    key = (spark.sparkContext.applicationId, f"q39d:{sf_dir}")
-    cached = _CSV_FIXTURE_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    from parquet_modular_encryption_spark.scratch import scratch_dir
+    from parquet_modular_encryption_spark.scratch import session_fixture
 
-    path = scratch_dir("pme_q39d_csv_")
-    rows = (
-        load(spark, sf_dir, "customer")
-        .filter(F.col("c_custkey") <= 150)
-        .select("c_custkey", "c_name", "c_acctbal")
-        .collect()  # fixture write only (bounded); the reads are distributed
-    )
-    with open(os.path.join(path, "part-000.csv"), "w", encoding="utf-8") as fh:
-        for r in rows:
-            fh.write(f"{r.c_custkey},{r.c_name},{r.c_acctbal}\n")
-            if r.c_custkey % 10 == 0:
-                fh.write(f"corrupt-{r.c_custkey},###,not_a_number\n")
-    _CSV_FIXTURE_CACHE[key] = path
-    return path
+    def build(path: str) -> None:
+        rows = (
+            load(spark, sf_dir, "customer")
+            .filter(F.col("c_custkey") <= 150)
+            .select("c_custkey", "c_name", "c_acctbal")
+            .collect()  # fixture write only (bounded); the reads are distributed
+        )
+        with open(os.path.join(path, "part-000.csv"), "w", encoding="utf-8") as fh:
+            for r in rows:
+                fh.write(f"{r.c_custkey},{r.c_name},{r.c_acctbal}\n")
+                if r.c_custkey % 10 == 0:
+                    fh.write(f"corrupt-{r.c_custkey},###,not_a_number\n")
+
+    return session_fixture(spark, "q39d_csv", build, sf_dir)
 
 
 @register(

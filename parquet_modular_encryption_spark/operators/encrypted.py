@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from parquet_modular_encryption_spark.functions.numeric import davg, sql_davg
 from parquet_modular_encryption_spark.registry import register
-from parquet_modular_encryption_spark.scratch import scratch_dir
+from parquet_modular_encryption_spark.scratch import scratch_dir, session_fixture
 from parquet_modular_encryption_spark.session import prep
 from parquet_modular_encryption_spark.sources.datasets import load
 from parquet_modular_encryption_spark.sources.encrypted_native import (
@@ -114,32 +114,18 @@ def q60b_encrypted_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow path's per-directory layout with path-level pruning.
 
     The encrypted partitioned dataset is memoized per (session, sf_dir,
-    backend) — it is index infrastructure (written once, pruned-scanned
-    repeatedly), the q54e/q91f pattern — so bench min-of-3 and driver
-    re-runs time the SERVING path (pruned decrypting scan), not the
-    one-time encrypting write. The write itself stays covered by
-    tests/test_encryption.py and the first (cold) invocation."""
+    backend) through ``scratch.session_fixture`` — it is index
+    infrastructure (written once, pruned-scanned repeatedly) — so bench
+    min-of-3 and driver re-runs time the SERVING path (pruned decrypting
+    scan), not the one-time encrypting write. A write that fails is not
+    memoized; the next call writes again. The write itself stays covered
+    by tests/test_encryption.py and the first (cold) invocation."""
     prep(spark)
-    import os
-
     from parquet_modular_encryption_spark.crypto.policy import CUSTOMER_POLICY
 
     plain = load(spark, sf_dir, "customer").withColumn(
         "nation_bucket", (F.col("c_nationkey") % 5).cast("int")
     ).coalesce(4)
-    native = native_pme_available(spark)[0]
-    memo_key = (
-        spark.sparkContext.applicationId,
-        f"q60b:{sf_dir}:{'native' if native else 'arrow'}",
-    )
-    cached = _Q60B_FIXTURE_CACHE.get(memo_key)
-    fresh = cached is None or not os.path.isdir(cached)
-    if fresh:
-        scratch = scratch_dir("pme_q60b_")
-        path = f"{scratch}/customer_enc_part"
-        _Q60B_FIXTURE_CACHE[memo_key] = path
-    else:
-        path = cached
 
     def _agg(frame: DataFrame) -> DataFrame:
         return frame.groupBy("c_mktsegment").agg(
@@ -147,14 +133,18 @@ def q60b_encrypted_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             davg("c_acctbal").alias("avg_acctbal"),
         )
 
-    if native:
+    if native_pme_available(spark)[0]:
         from parquet_modular_encryption_spark.crypto.kms_server import shared_kms_url
 
         kms_url = shared_kms_url()
-        if fresh:
-            write_encrypted_native(
-                plain, path, CUSTOMER_POLICY, kms_url, partition_by=["nation_bucket"]
-            )
+        path = session_fixture(
+            spark,
+            "q60b_native",
+            lambda p: write_encrypted_native(
+                plain, p, CUSTOMER_POLICY, kms_url, partition_by=["nation_bucket"]
+            ),
+            sf_dir,
+        )
         with decrypting_scan(spark, path, kms_url, "RESTRICTED") as enc:
             return _agg(enc.filter(F.col("nation_bucket") == 2))
     from parquet_modular_encryption_spark.sources.encrypted import (
@@ -162,16 +152,15 @@ def q60b_encrypted_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_encrypted_partitioned,
     )
 
-    if fresh:
-        write_encrypted_partitioned(plain, path, CUSTOMER_POLICY, "nation_bucket")
+    path = session_fixture(
+        spark,
+        "q60b_arrow",
+        lambda p: write_encrypted_partitioned(plain, p, CUSTOMER_POLICY, "nation_bucket"),
+        sf_dir,
+    )
     # path-level pruning: only the matching bucket's directory is listed,
     # so only its files are opened and only their keys unwrapped
     return _agg(read_encrypted(spark, f"{path}/nation_bucket=2", token="RESTRICTED"))
-
-
-#: appId-scoped memo for q60b's encrypted partitioned dataset (see its
-#: docstring) — a fresh session always rebuilds.
-_Q60B_FIXTURE_CACHE: dict[tuple[str, str], str] = {}
 
 
 @register(

@@ -276,42 +276,33 @@ def q47d_minhash_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _jaccard_verify(shingled, pairs)
 
 
-#: per-(app, sf) memo of the q47e encrypted-documents fixture directory
-_ENC_DOCS_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _encrypted_docs_dir(spark: SparkSession, sf_dir: str) -> str:
-    """documents written PME-encrypted once per session+sf: text is the
-    sensitive column (CONFIDENTIAL), doc_id stays plaintext so catalog
-    operations need no key — the reference's id-column convention."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, f"q47e:{sf_dir}")
-    cached = _ENC_DOCS_CACHE.get(key)
-    if cached is not None and _os.path.isdir(cached):
-        return cached
+    """documents written PME-encrypted once per session+sf (through
+    ``scratch.session_fixture``): text is the sensitive column
+    (CONFIDENTIAL), doc_id stays plaintext so catalog operations need no
+    key — the reference's id-column convention."""
     from parquet_modular_encryption_spark.crypto.policy import (
         EncryptionPolicy,
         Privilege,
     )
-    from parquet_modular_encryption_spark.scratch import scratch_dir
+    from parquet_modular_encryption_spark.scratch import session_fixture
     from parquet_modular_encryption_spark.sources.encrypted import write_encrypted
 
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text").coalesce(4)
-    path = scratch_dir("pme_q47e_")
-    # v1 data pages: q49f reads this lake through the native parquet-mr
-    # scan when the session carries the KMS jar, and the arrow<->mr PME
-    # interop holds for v1 pages only (see _decrypting_pinned_read)
-    write_encrypted(
-        docs,
-        path,
-        EncryptionPolicy(
-            column_levels={"text": Privilege.CONFIDENTIAL}, name="documents"
-        ),
-        data_page_version="1.0",
-    )
-    _ENC_DOCS_CACHE[key] = path
-    return path
+    def build(path: str) -> None:
+        docs = load(spark, sf_dir, "documents").select("doc_id", "text").coalesce(4)
+        # v1 data pages: q49f reads this lake through the native parquet-mr
+        # scan when the session carries the KMS jar, and the arrow<->mr PME
+        # interop holds for v1 pages only (see _decrypting_pinned_read)
+        write_encrypted(
+            docs,
+            path,
+            EncryptionPolicy(
+                column_levels={"text": Privilege.CONFIDENTIAL}, name="documents"
+            ),
+            data_page_version="1.0",
+        )
+
+    return session_fixture(spark, "q47e", build, sf_dir)
 
 
 @register(

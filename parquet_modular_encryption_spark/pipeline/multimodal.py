@@ -545,6 +545,7 @@ def frame_sample_real(media: DataFrame, every_nth: int = 10) -> DataFrame:
 # -- driver-visible registration -------------------------------------------
 
 from parquet_modular_encryption_spark.registry import register  # noqa: E402
+from parquet_modular_encryption_spark.scratch import session_fixture  # noqa: E402
 from parquet_modular_encryption_spark.session import prep  # noqa: E402
 
 
@@ -573,16 +574,7 @@ def q91b_real_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     prep(spark)
     scratch = tempfile.mkdtemp(prefix="pme_q91b_")
-    from parquet_modular_encryption_spark.sources.datasets import load
-
-    ids = [
-        r.doc_id
-        for r in load(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 37 == 0)
-        .select("doc_id")
-        .collect()  # fixture write only; the decode read is distributed
-    ]
-    for doc_id in ids:
+    for doc_id in _planted_ids(spark, sf_dir, 37):
         w, h = 16 + (doc_id % 9) * 4, 16 + (doc_id % 7) * 4
         with open(f"{scratch}/{doc_id}.png", "wb") as fh:
             fh.write(encode_png(w, h, seed=doc_id))
@@ -640,7 +632,7 @@ def q91_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     siblings — this query's job is the PIPELINE shape."""
     prep(spark)
     media = spark.read.parquet(
-        _memoized_fixture(spark, "media96", lambda: synthetic_media(spark, n=96))
+        _parquet_fixture(spark, "media96", lambda: synthetic_media(spark, n=96))
     )
     feats = extract_features(media)
     frames = frame_sample(media, every_nth=10).groupBy("media_id").count()
@@ -687,27 +679,24 @@ def _le_u32(col: F.Column, off: int) -> F.Column:
     ).cast("bigint")
 
 
-#: appId → fixture parquet path. The synthetic media/WAV tables are INPUT
-#: data (what an ingest would have landed already), not part of the
-#: measured operator — build them once per session so bench min-of-3 and
-#: driver re-runs measure the scan + decode path (q54e's layout-memo
-#: pattern). Keyed by appId so a fresh session rebuilds.
-_MEDIA_FIXTURE_CACHE: dict[tuple[str, str], str] = {}
+def _parquet_fixture(spark: SparkSession, name: str, build) -> str:
+    """``build()``'s frame written once per session as parquet. The
+    synthetic media/WAV tables are INPUT data (what an ingest would have
+    landed already), so bench min-of-3 and driver re-runs measure the
+    scan + decode path, not the fixture write."""
+    return session_fixture(
+        spark, name, lambda path: build().write.mode("overwrite").parquet(path)
+    )
 
 
-def _memoized_fixture(spark: SparkSession, kind: str, build) -> str:
-    import os
+def _planted_ids(spark: SparkSession, sf_dir: str, modulus: int) -> list[int]:
+    """The doc_ids divisible by ``modulus``: the media ids a loose-file
+    fixture plants. Collected for the fixture write only; the decode
+    reads of those files are distributed."""
+    from parquet_modular_encryption_spark.sources.datasets import load
 
-    key = (spark.sparkContext.applicationId, kind)
-    cached = _MEDIA_FIXTURE_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    from parquet_modular_encryption_spark.scratch import scratch_dir
-
-    path = scratch_dir(f"pme_{kind}_")
-    build().write.mode("overwrite").parquet(path)
-    _MEDIA_FIXTURE_CACHE[key] = path
-    return path
+    docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") % modulus == 0)
+    return [r.doc_id for r in docs.select("doc_id").collect()]
 
 
 def parse_headers(media: DataFrame) -> DataFrame:
@@ -777,7 +766,7 @@ def q91c_media_header_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     header sniffing — the metadata pass a 100 TB media lake runs before
     any expensive body decode — needs no Python workers at all."""
     prep(spark)
-    path = _memoized_fixture(spark, "media96", lambda: synthetic_media(spark, n=96))
+    path = _parquet_fixture(spark, "media96", lambda: synthetic_media(spark, n=96))
     parsed = parse_headers(spark.read.parquet(path))
     return (
         parsed.groupBy("modality")
@@ -938,7 +927,7 @@ def q91d_audio_pcm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     real header parse + real PNG pixels; video: real container walk,
     codec-gated body)."""
     prep(spark)
-    path = _memoized_fixture(spark, "q91d", lambda: synthetic_wav(spark))
+    path = _parquet_fixture(spark, "q91d", lambda: synthetic_wav(spark))
     return audio_features(spark.read.parquet(path)).orderBy("media_id")
 
 
@@ -989,39 +978,24 @@ def _phash_media_ids(base_id: int) -> tuple[int, int, int]:
 
 
 def _phash_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Write the planted base/dup/twin PNG set as loose files (memoized
-    per session+sf, like the media fixtures): at 100 TB this directory is
+    """Write the planted base/dup/twin PNG set as loose files (once per
+    session+sf, ``scratch.session_fixture``): at 100 TB this directory is
     the object store and the write disappears."""
-    import os
 
-    key = (spark.sparkContext.applicationId, f"q91e:{sf_dir}")
-    cached = _MEDIA_FIXTURE_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    from parquet_modular_encryption_spark.scratch import scratch_dir
-    from parquet_modular_encryption_spark.sources.datasets import load
+    def build(path: str) -> None:
+        for base in _planted_ids(spark, sf_dir, 37):
+            w, h = 16 + (base % 9) * 4, 16 + (base % 7) * 4
+            px = bytearray(lcg_pixels(w, h, seed=base))
+            twin = bytearray(px)
+            for cell in _PHASH_FLIP_CELLS:
+                y, x = ((cell // 8) * h) // 8, ((cell % 8) * w) // 8
+                twin[y * w + x] = (twin[y * w + x] + 128) % 256
+            base_id, dup_id, twin_id = _phash_media_ids(base)
+            for media_id, pixels in ((base_id, px), (dup_id, px), (twin_id, twin)):
+                with open(f"{path}/{media_id}.png", "wb") as fh:
+                    fh.write(png_from_pixels(w, h, bytes(pixels)))
 
-    path = scratch_dir("pme_q91e_")
-    ids = [
-        r.doc_id
-        for r in load(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 37 == 0)
-        .select("doc_id")
-        .collect()  # fixture write only; the hashing read is distributed
-    ]
-    for base in ids:
-        w, h = 16 + (base % 9) * 4, 16 + (base % 7) * 4
-        px = bytearray(lcg_pixels(w, h, seed=base))
-        twin = bytearray(px)
-        for cell in _PHASH_FLIP_CELLS:
-            y, x = ((cell // 8) * h) // 8, ((cell % 8) * w) // 8
-            twin[y * w + x] = (twin[y * w + x] + 128) % 256
-        base_id, dup_id, twin_id = _phash_media_ids(base)
-        for media_id, pixels in ((base_id, px), (dup_id, px), (twin_id, twin)):
-            with open(f"{path}/{media_id}.png", "wb") as fh:
-                fh.write(png_from_pixels(w, h, bytes(pixels)))
-    _MEDIA_FIXTURE_CACHE[key] = path
-    return path
+    return session_fixture(spark, "q91e", build, sf_dir)
 
 
 def phash_frame(media: DataFrame) -> DataFrame:
@@ -1166,28 +1140,24 @@ def q91f_phash_encrypted(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor-side; the decrypting scan is file-granular parallel — the
     KMS cost is per-file-per-key wrap/unwrap, amortized over row groups."""
     prep(spark)
-    from parquet_modular_encryption_spark.scratch import scratch_dir
     from parquet_modular_encryption_spark.sources.encrypted import (
         read_encrypted,
         write_encrypted,
     )
 
-    png_dir = _phash_fixture_dir(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, f"q91f:{sf_dir}")
-    enc_path = _MEDIA_FIXTURE_CACHE.get(key)
-    import os
-
-    if enc_path is None or not os.path.isdir(enc_path):
-        blobs = spark.read.format("binaryFile").load(f"{png_dir}/*.png")
+    def build(path: str) -> None:
+        blobs = spark.read.format("binaryFile").load(
+            f"{_phash_fixture_dir(spark, sf_dir)}/*.png"
+        )
         media = blobs.select(
             F.regexp_extract(F.col("path"), r"(\d+)\.png$", 1)
             .cast("bigint")
             .alias("media_id"),
             F.col("content").alias("payload"),
         ).coalesce(4)
-        enc_path = scratch_dir("pme_q91f_")
-        write_encrypted(media, enc_path, _media_encryption_policy())
-        _MEDIA_FIXTURE_CACHE[key] = enc_path
+        write_encrypted(media, path, _media_encryption_policy())
+
+    enc_path = session_fixture(spark, "q91f", build, sf_dir)
     media = read_encrypted(spark, enc_path, token="RESTRICTED")
     return phash_neardup_pairs(phash_frame(media))
 
@@ -1334,31 +1304,17 @@ def _avi_frame_pixels(media_id: int, frame: int, width: int, height: int) -> byt
 
 
 def _avi_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Loose .avi files for the q91g ids (memoized per session+sf)."""
-    import os
+    """Loose .avi files for the q91g ids (once per session+sf,
+    ``scratch.session_fixture``)."""
 
-    key = (spark.sparkContext.applicationId, f"q91g:{sf_dir}")
-    cached = _MEDIA_FIXTURE_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    from parquet_modular_encryption_spark.scratch import scratch_dir
-    from parquet_modular_encryption_spark.sources.datasets import load
+    def build(path: str) -> None:
+        for mid in _planted_ids(spark, sf_dir, 41):
+            w, h, nf = _avi_params(mid)
+            frames = [_avi_frame_pixels(mid, f, w, h) for f in range(nf)]
+            with open(f"{path}/{mid}.avi", "wb") as fh:
+                fh.write(encode_avi_bi_rgb(w, h, frames))
 
-    ids = [
-        r.doc_id
-        for r in load(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 41 == 0)
-        .select("doc_id")
-        .collect()  # fixture write only; the decode read is distributed
-    ]
-    path = scratch_dir("pme_q91g_")
-    for mid in ids:
-        w, h, nf = _avi_params(mid)
-        frames = [_avi_frame_pixels(mid, f, w, h) for f in range(nf)]
-        with open(f"{path}/{mid}.avi", "wb") as fh:
-            fh.write(encode_avi_bi_rgb(w, h, frames))
-    _MEDIA_FIXTURE_CACHE[key] = path
-    return path
+    return session_fixture(spark, "q91g", build, sf_dir)
 
 
 @register(
@@ -1565,39 +1521,25 @@ def _mjpeg_block_values(media_id: int, frame: int, nbx: int, nby: int) -> "np.nd
 
 
 def _mjpeg_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Loose .avi MJPEG files for the q91h ids (memoized per session+sf)."""
-    import os
-
-    key = (spark.sparkContext.applicationId, f"q91h:{sf_dir}")
-    cached = _MEDIA_FIXTURE_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
+    """Loose .avi MJPEG files for the q91h ids (once per session+sf,
+    ``scratch.session_fixture``)."""
     from parquet_modular_encryption_spark.pipeline.jpegcodec import (
         encode_jpeg_gray_flat,
     )
-    from parquet_modular_encryption_spark.scratch import scratch_dir
-    from parquet_modular_encryption_spark.sources.datasets import load
 
-    ids = [
-        r.doc_id
-        for r in load(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 43 == 0)
-        .select("doc_id")
-        .collect()  # fixture write only; the decode read is distributed
-    ]
-    path = scratch_dir("pme_q91h_")
-    for mid in ids:
-        nbx, nby, nf = _mjpeg_params(mid)
-        frames = [
-            encode_jpeg_gray_flat(
-                nbx * 8, nby * 8, _mjpeg_block_values(mid, f, nbx, nby)
-            )
-            for f in range(nf)
-        ]
-        with open(f"{path}/{mid}.avi", "wb") as fh:
-            fh.write(encode_avi_mjpeg(nbx * 8, nby * 8, frames))
-    _MEDIA_FIXTURE_CACHE[key] = path
-    return path
+    def build(path: str) -> None:
+        for mid in _planted_ids(spark, sf_dir, 43):
+            nbx, nby, nf = _mjpeg_params(mid)
+            frames = [
+                encode_jpeg_gray_flat(
+                    nbx * 8, nby * 8, _mjpeg_block_values(mid, f, nbx, nby)
+                )
+                for f in range(nf)
+            ]
+            with open(f"{path}/{mid}.avi", "wb") as fh:
+                fh.write(encode_avi_mjpeg(nbx * 8, nby * 8, frames))
+
+    return session_fixture(spark, "q91h", build, sf_dir)
 
 
 @register(
@@ -1945,31 +1887,17 @@ def _rle8_frame_pixels(media_id: int, frame: int, width: int, height: int) -> by
 
 
 def _rle8_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Loose .avi BI_RLE8 files for the q91i ids (memoized per session+sf)."""
-    import os
+    """Loose .avi BI_RLE8 files for the q91i ids (once per session+sf,
+    ``scratch.session_fixture``)."""
 
-    key = (spark.sparkContext.applicationId, f"q91i:{sf_dir}")
-    cached = _MEDIA_FIXTURE_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    from parquet_modular_encryption_spark.scratch import scratch_dir
-    from parquet_modular_encryption_spark.sources.datasets import load
+    def build(path: str) -> None:
+        for mid in _planted_ids(spark, sf_dir, 47):
+            w, h, nf = _rle8_params(mid)
+            frames = [_rle8_frame_pixels(mid, f, w, h) for f in range(nf)]
+            with open(f"{path}/{mid}.avi", "wb") as fh:
+                fh.write(encode_avi_rle8(w, h, frames))
 
-    ids = [
-        r.doc_id
-        for r in load(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 47 == 0)
-        .select("doc_id")
-        .collect()  # fixture write only; the decode read is distributed
-    ]
-    path = scratch_dir("pme_q91i_")
-    for mid in ids:
-        w, h, nf = _rle8_params(mid)
-        frames = [_rle8_frame_pixels(mid, f, w, h) for f in range(nf)]
-        with open(f"{path}/{mid}.avi", "wb") as fh:
-            fh.write(encode_avi_rle8(w, h, frames))
-    _MEDIA_FIXTURE_CACHE[key] = path
-    return path
+    return session_fixture(spark, "q91i", build, sf_dir)
 
 
 @register(
@@ -2118,50 +2046,34 @@ def _cjpeg_plant(media_id: int, w: int, h: int, sampling: str):
 
 
 def _cjpeg_fixture_dir(spark: SparkSession, sf_dir: str, restart: bool = False) -> str:
-    """Loose .jpg color files for the q91j/q91k ids (memoized per
-    session+sf). ``restart=True`` (q91k) encodes every file with a DRI
+    """Loose .jpg color files for the q91j/q91k ids (once per session+sf,
+    ``scratch.session_fixture``). ``restart=True`` (q91k) encodes every file with a DRI
     restart interval derived from its id — Ri = 1 + (id % 4) MCUs, so
     multi-MCU files carry RST marker chains (Ri=1 wraps the modulo-8
     index on the larger layouts) while the 1-MCU files stay markerless,
     both inside the same scan profile the decoder must serve."""
-    import os
-
-    tag = "q91k" if restart else "q91j"
-    key = (spark.sparkContext.applicationId, f"{tag}:{sf_dir}")
-    cached = _MEDIA_FIXTURE_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
     from parquet_modular_encryption_spark.pipeline.jpegcodec import (
         encode_jpeg_color_flat,
     )
-    from parquet_modular_encryption_spark.scratch import scratch_dir
-    from parquet_modular_encryption_spark.sources.datasets import load
 
-    ids = [
-        r.doc_id
-        for r in load(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 53 == 0)
-        .select("doc_id")
-        .collect()  # fixture write only; the decode read is distributed
-    ]
-    path = scratch_dir(f"pme_{tag}_")
-    n_with_rst = 0
-    for mid in ids:
-        sampling, w, h = _cjpeg_params(mid)
-        y, cb, cr = _cjpeg_plant(mid, w, h, sampling)
-        ri = (1 + mid % 4) if restart else 0
-        blob = encode_jpeg_color_flat(w, h, y, cb, cr, sampling, ri)
-        if restart and b"\xff\xd0" in blob:
-            n_with_rst += 1
-        with open(f"{path}/{mid}.jpg", "wb") as fh:
-            fh.write(blob)
-    if restart and n_with_rst == 0:
-        # the fixture must actually EXERCISE restarts, not just declare
-        # DRI — a RuntimeError (not assert) so the invariant survives
-        # `python -O` (ADVICE r13)
-        raise RuntimeError("q91k fixture planted no RST markers")
-    _MEDIA_FIXTURE_CACHE[key] = path
-    return path
+    def build(path: str) -> None:
+        n_with_rst = 0
+        for mid in _planted_ids(spark, sf_dir, 53):
+            sampling, w, h = _cjpeg_params(mid)
+            y, cb, cr = _cjpeg_plant(mid, w, h, sampling)
+            ri = (1 + mid % 4) if restart else 0
+            blob = encode_jpeg_color_flat(w, h, y, cb, cr, sampling, ri)
+            if restart and b"\xff\xd0" in blob:
+                n_with_rst += 1
+            with open(f"{path}/{mid}.jpg", "wb") as fh:
+                fh.write(blob)
+        if restart and n_with_rst == 0:
+            # the fixture must actually EXERCISE restarts, not just declare
+            # DRI — a RuntimeError (not assert) so the invariant survives
+            # `python -O` (ADVICE r13)
+            raise RuntimeError("q91k fixture planted no RST markers")
+
+    return session_fixture(spark, "q91k" if restart else "q91j", build, sf_dir)
 
 
 #: Shared q91j/q91k oracle: per-channel pixel sums and row/col-weighted R

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from parquet_modular_encryption_spark.registry import register
-from parquet_modular_encryption_spark.scratch import scratch_dir
+from parquet_modular_encryption_spark.scratch import session_fixture
 from parquet_modular_encryption_spark.session import prep
 from parquet_modular_encryption_spark.sources.datasets import load
 
@@ -1613,14 +1613,6 @@ def q54j_ann_ivf_sqrtn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_sqrtn_search(spark, sf_dir, IVF_SQRTN_NPROBE)
 
 
-#: (applicationId, sf_dir) → layout path. The cell-partitioned corpus is
-#: a PERSISTENT INDEX — built once per corpus, probed by every query —
-#: so repeated q54e invocations in one session (bench min-of-3, driver
-#: registry re-runs) reuse it and measure the SERVING path, exactly the
-#: 100 TB economics. Keyed by appId so a fresh session rebuilds.
-_IVF_LAYOUT_CACHE: dict[tuple[str, str], str] = {}
-
-
 def ivf_assignment(emb: DataFrame) -> DataFrame:
     """(vec_id, cell) nearest-centroid assignment against the label
     codebook — q54d's map-side argmax (broadcast K-row codebook,
@@ -1646,21 +1638,20 @@ def ivf_partitioned_layout(spark: SparkSession, sf_dir: str) -> str:
     full scan. Assignment is q54d's map-side argmax against the broadcast
     K-row codebook; vectors are stored INSIDE their cell files so the
     rerank needs no second corpus join. Memoized per (session, corpus):
-    the layout is index infrastructure, not per-query work."""
-    import os
+    the layout is a PERSISTENT INDEX — built once per corpus, probed by
+    every query — so repeated q54e invocations in one session (bench
+    min-of-3, driver registry re-runs) reuse it through
+    ``scratch.session_fixture`` and measure the SERVING path, the 100 TB
+    economics."""
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _IVF_LAYOUT_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    prep(spark)
-    emb = load(spark, sf_dir, "embeddings")
-    e = emb.select("vec_id", as_double(F.col("embedding")).alias("ee"))
-    assign = ivf_assignment(emb)
-    path = scratch_dir("pme_q54e_")
-    e.join(assign, "vec_id").write.mode("overwrite").partitionBy("cell").parquet(path)
-    _IVF_LAYOUT_CACHE[key] = path
-    return path
+    def build(path: str) -> None:
+        prep(spark)
+        emb = load(spark, sf_dir, "embeddings")
+        e = emb.select("vec_id", as_double(F.col("embedding")).alias("ee"))
+        assign = ivf_assignment(emb)
+        e.join(assign, "vec_id").write.mode("overwrite").partitionBy("cell").parquet(path)
+
+    return session_fixture(spark, "q54e", build, sf_dir)
 
 
 @register("q54e_ann_ivf_partitioned", oracle=_ivf_oracle(), tags=("similarity", "ann", "ivf"))

@@ -331,17 +331,20 @@ def write_encrypted_partitioned(
     cannot make the distinct pass and the filter passes disagree —
     without this, rows could silently drop or duplicate across partition
     directories, and the full upstream DAG would recompute N+1 times.
-    Returns total file count."""
+    NULL partition values go last, into
+    ``{partition_col}=__HIVE_DEFAULT_PARTITION__/`` as Spark's native
+    ``partitionBy`` writes them. Returns total file count."""
     from pyspark.sql import functions as F
 
     df = df.persist()
     try:
         values = [r[0] for r in df.select(partition_col).distinct().collect()]
         total = 0
-        for v in sorted(values):
-            part = df.filter(F.col(partition_col) == v)
+        for v in sorted(values, key=lambda v: (v is None, v)):
+            part = df.filter(F.col(partition_col).eqNullSafe(v))
+            name = "__HIVE_DEFAULT_PARTITION__" if v is None else v
             total += write_encrypted(
-                part, f"{path}/{partition_col}={v}", policy, kms_url, **write_kwargs
+                part, f"{path}/{partition_col}={name}", policy, kms_url, **write_kwargs
             )
     finally:
         df.unpersist()

@@ -126,29 +126,24 @@ from parquet_modular_encryption_spark.sources.datasets import load  # noqa: E402
 #: checksum modulus: keeps SUM(hash60 % M) well under 2^63 up to ~9e9 rows.
 _CK_MOD = 1_000_000_007
 
-#: (appId, sf_dir) -> shard dir. Fixture is infrastructure (the feed being
-#: ingested), built once per session so bench/driver re-runs measure the
-#: custom-source SCAN, not the fixture write (q54e layout-memo pattern).
-_JSONL_FIXTURE_CACHE: dict[tuple[str, str], str] = {}
-
 _N_SHARDS = 4
 
 
 def jsonl_fixture(spark: SparkSession, sf_dir: str) -> str:
-    import os
+    """documents as JSONL shards: the feed being ingested, built once per
+    session through ``scratch.session_fixture`` so bench/driver re-runs
+    measure the custom-source SCAN, not the fixture write."""
+    from parquet_modular_encryption_spark.scratch import session_fixture
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _JSONL_FIXTURE_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    from parquet_modular_encryption_spark.scratch import scratch_dir
-
-    path = scratch_dir("pme_q39b_jsonl_")
-    load(spark, sf_dir, "documents").repartition(_N_SHARDS).write.mode(
-        "overwrite"
-    ).json(path)
-    _JSONL_FIXTURE_CACHE[key] = path
-    return path
+    return session_fixture(
+        spark,
+        "q39b_jsonl",
+        lambda path: load(spark, sf_dir, "documents")
+        .repartition(_N_SHARDS)
+        .write.mode("overwrite")
+        .json(path),
+        sf_dir,
+    )
 
 
 @register(
@@ -290,24 +285,20 @@ def q39c_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the .tmp/rename protocol means a reader never observes a partial
     job."""
     prep(spark)
-    from parquet_modular_encryption_spark.scratch import scratch_dir
+    from parquet_modular_encryption_spark.scratch import session_fixture
 
     spark.dataSource.register(JsonlDataSource)
-    key = (spark.sparkContext.applicationId, f"q39c:{sf_dir}")
-    path = _JSONL_FIXTURE_CACHE.get(key)
-    import os
-
-    if path is None or not os.path.isdir(path):
-        path = scratch_dir("pme_q39c_jsonl_")
-        (
-            load(spark, sf_dir, "documents")
-            .repartition(_N_SHARDS)
-            .write.format("pme_jsonl")
-            .mode("append")
-            .option("path", path)
-            .save()
-        )
-        _JSONL_FIXTURE_CACHE[key] = path
+    path = session_fixture(
+        spark,
+        "q39c_jsonl",
+        lambda p: load(spark, sf_dir, "documents")
+        .repartition(_N_SHARDS)
+        .write.format("pme_jsonl")
+        .mode("append")
+        .option("path", p)
+        .save(),
+        sf_dir,
+    )
     docs = spark.read.format("pme_jsonl").option("path", path).load()
     return docs.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -114,9 +114,16 @@ def _scan_unreleased_pins(src: str) -> list[int]:
 #: ``salted_hot_feature_join`` -> ``(frame, grid)``).
 DECISION_GLOBAL = r"LAST_[A-Z0-9_]*"
 
+#: A module-level ``*_CACHE`` dict memoizing a fixture repeats the one
+#: memo in ``scratch.py`` (``session_fixture``), which keys on the
+#: session and records a directory only after its build succeeded.
+CACHE_GLOBAL = r"[A-Za-z0-9_]*_CACHE"
+CACHE_HOME = os.path.join("parquet_modular_encryption_spark", "scratch.py")
 
-def _scan_decision_globals(src: str) -> list[int]:
-    """Lines (1-based) of module-level assignments to a ``LAST_*`` name."""
+
+def _scan_module_globals(src: str, pattern: str) -> list[int]:
+    """Lines (1-based) of module-level assignments to a name matching
+    ``pattern``."""
     import ast
     import re
 
@@ -129,9 +136,20 @@ def _scan_decision_globals(src: str) -> list[int]:
         else:
             continue
         names = [n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)]
-        if any(re.fullmatch(DECISION_GLOBAL, n) for n in names):
+        if any(re.fullmatch(pattern, n) for n in names):
             lines.append(node.lineno)
     return lines
+
+
+def _scan_decision_globals(src: str) -> list[int]:
+    """Lines (1-based) of module-level assignments to a ``LAST_*`` name."""
+    return _scan_module_globals(src, DECISION_GLOBAL)
+
+
+def _scan_cache_globals(src: str, rel: str) -> list[int]:
+    """Lines (1-based) of module-level ``*_CACHE`` assignments in any
+    package module other than ``scratch.py``."""
+    return [] if rel == CACHE_HOME else _scan_module_globals(src, CACHE_GLOBAL)
 
 
 def scan_antipatterns() -> list[str]:
@@ -155,6 +173,11 @@ def scan_antipatterns() -> list[str]:
                 findings.append(
                     f"{rel}:{line}: module-level LAST_* decision global — "
                     "return the decision record with the frame instead."
+                )
+            for line in _scan_cache_globals(src, rel):
+                findings.append(
+                    f"{rel}:{line}: module-level *_CACHE memo — build the "
+                    "fixture through scratch.session_fixture instead."
                 )
             for line in _scan_unreleased_pins(src):
                 findings.append(

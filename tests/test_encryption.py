@@ -6,6 +6,7 @@ and ciphertext opacity on disk."""
 from __future__ import annotations
 
 import datetime
+import os
 
 import pyarrow.parquet as pq
 import pytest
@@ -237,6 +238,69 @@ def test_partition_pruning_skips_kms_unwraps(spark, tmp_path):
         f"pruned read unwrapped {u_pruned} vs {u_full} for the full scan — "
         "pruning is not skipping KMS work"
     )
+
+
+def test_partitioned_write_keeps_null_partition_rows(spark, tmp_path):
+    """NULL partition values sort last and land in
+    ``bucket=__HIVE_DEFAULT_PARTITION__/``, as Spark's native partitionBy
+    writes them: reading every partition directory back returns every
+    input row, the NULL-bucket one included."""
+    from parquet_modular_encryption_spark.sources.encrypted import (
+        write_encrypted_partitioned,
+    )
+
+    buckets = (10, None, 10, 20)
+    rows = [
+        (i, datetime.date(1990, 1, 1 + i), f"fn{i}", f"ln{i}", f"{i:09d}", b)
+        for i, b in enumerate(buckets)
+    ]
+    df = spark.createDataFrame(rows, PEOPLE_SCHEMA + ", bucket int")
+    path = str(tmp_path / "part_null")
+    write_encrypted_partitioned(df, path, PEOPLE_POLICY, "bucket")
+
+    dirs = sorted(os.listdir(path))
+    assert dirs == ["bucket=10", "bucket=20", "bucket=__HIVE_DEFAULT_PARTITION__"]
+    got = [
+        tuple(r)
+        for d in dirs
+        for r in read_encrypted(spark, f"{path}/{d}", token="RESTRICTED").collect()
+    ]
+    assert sorted(got, key=repr) == sorted(rows, key=repr)
+
+
+def test_q60b_rewrites_lake_after_failed_write(spark, duck, sf_dir, tmp_path, monkeypatch):
+    """A q60b lake whose encrypting write failed part-way is not
+    memoized: the next call in the same session writes it again and
+    matches the oracle. Arrow path, as in a session without the KMS
+    jar; the write fails on its second partition value."""
+    import parquet_modular_encryption_spark.operators.encrypted as ops
+    import parquet_modular_encryption_spark.sources.encrypted as enc
+    from parquet_modular_encryption_spark.registry import load_all
+
+    monkeypatch.setattr(ops, "native_pme_available", lambda _spark: (False, "arrow"))
+    # a memo key no earlier call used: the same tables under a new sf_dir
+    sf = str(tmp_path / "sf")
+    os.symlink(sf_dir, sf)
+
+    real = enc.write_encrypted
+    calls = []
+
+    def fails_on_second_call(*args, **kwargs):
+        calls.append(args[1])
+        if len(calls) == 2:
+            raise RuntimeError("injected write failure")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(enc, "write_encrypted", fails_on_second_call)
+    with pytest.raises(RuntimeError, match="injected write failure"):
+        ops.q60b_encrypted_partitioned(spark, sf)
+    monkeypatch.setattr(enc, "write_encrypted", real)
+
+    got = ops.q60b_encrypted_partitioned(spark, sf)
+    rel = duck.sql(load_all()["q60b_encrypted_partitioned"].oracle)
+    cols = sorted(rel.columns)
+    want = sorted(tuple(dict(zip(rel.columns, r))[c] for c in cols) for r in rel.fetchall())
+    assert sorted(tuple(r[c] for c in cols) for r in got.collect()) == want
 
 
 def test_key_rotation_policy_migration(spark, people_path, tmp_path):

@@ -143,6 +143,30 @@ def test_decision_global_scanner_ignores_locals_and_other_names():
     assert lint._scan_decision_globals(src) == []
 
 
+# ------------------------------------------------------ fixture memos
+
+
+def test_cache_global_scanner_fires_outside_scratch():
+    # the per-module q60b memo the package carried before session_fixture
+    src = (
+        "#: appId-scoped memo for q60b's encrypted partitioned dataset\n"
+        "_Q60B_FIXTURE_CACHE: dict[tuple[str, str], str] = {}\n"
+        "def f():\n"
+        "    _LOCAL_CACHE = {}\n"
+    )
+    rel = os.path.join("parquet_modular_encryption_spark", "operators", "encrypted.py")
+    assert lint._scan_cache_globals(src, rel) == [2]
+
+
+def test_cache_global_scanner_passes_scratch_memo():
+    rel = os.path.join("parquet_modular_encryption_spark", "scratch.py")
+    with open(os.path.join(REPO, rel)) as fh:
+        src = fh.read()
+    # the memo is there, and only its home module may hold it
+    assert lint._scan_cache_globals(src, "elsewhere.py") != []
+    assert lint._scan_cache_globals(src, rel) == []
+
+
 # ------------------------------------------------------ package clean
 
 

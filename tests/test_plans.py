@@ -610,8 +610,11 @@ def test_explosive_self_joins_pin_parallelism(spark, sf_dir):
         ("banded_pairs", banded_pairs(bands)),
         ("banded_pairs_salted", banded_pairs_salted(bands)[0]),
     ):
-        df.count()  # executed (AQE-final) plan, not the pre-execution guess
+        # execute df itself (a count() runs a separate query) so its plan
+        # is the AQE-final one, not the pre-execution guess
+        df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan, plan.splitlines()[0]
         assert "REPARTITION_BY_NUM" in plan, (
             f"{name} lost its explosive-join parallelism pin"
         )
