@@ -8,8 +8,6 @@ it; none of these do)."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -20,6 +18,7 @@ from parquet_modular_encryption_spark.functions.numeric import (
     sql_dsum_floor,
 )
 from parquet_modular_encryption_spark.registry import register
+from parquet_modular_encryption_spark.scratch import scratch_dir
 from parquet_modular_encryption_spark.session import prep
 from parquet_modular_encryption_spark.sources.datasets import load
 
@@ -252,7 +251,7 @@ def q39_csv_json_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     the round-trip is lossless. Int/string columns only: CSV float
     round-trips are not bit-stable by design."""
     prep(spark)
-    scratch = tempfile.mkdtemp(prefix="pme_q39_")
+    scratch = scratch_dir("pme_q39_")
     nation = load(spark, sf_dir, "nation")
     region = load(spark, sf_dir, "region")
     nation.write.mode("overwrite").option("header", True).csv(f"{scratch}/nation_csv")
@@ -325,7 +324,7 @@ def q113_orc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     check). Scale: ORC splits by stripe like parquet by row group — the
     read side parallelizes identically."""
     prep(spark)
-    scratch = tempfile.mkdtemp(prefix="pme_q113_")
+    scratch = scratch_dir("pme_q113_")
     orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     orders.write.mode("overwrite").orc(f"{scratch}/orders_orc")
     back = spark.read.orc(f"{scratch}/orders_orc")
@@ -356,7 +355,7 @@ def q114_binary_file_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     them across executors; content hashing stays JVM-side (F.md5 on the
     binary column, no Python)."""
     prep(spark)
-    scratch = tempfile.mkdtemp(prefix="pme_q114_")
+    scratch = scratch_dir("pme_q114_")
     docs = (
         load(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 20 == 0)

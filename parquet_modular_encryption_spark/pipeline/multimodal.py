@@ -545,7 +545,7 @@ def frame_sample_real(media: DataFrame, every_nth: int = 10) -> DataFrame:
 # -- driver-visible registration -------------------------------------------
 
 from parquet_modular_encryption_spark.registry import register  # noqa: E402
-from parquet_modular_encryption_spark.scratch import session_fixture  # noqa: E402
+from parquet_modular_encryption_spark.scratch import scratch_dir, session_fixture  # noqa: E402
 from parquet_modular_encryption_spark.session import prep  # noqa: E402
 
 
@@ -570,10 +570,8 @@ def q91b_real_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the fixture write disappears (blobs live in object storage);
     binaryFile listing + per-partition header parse is the scale shape:
     only headers are touched per image, no pixel decode, no driver I/O."""
-    import tempfile
-
     prep(spark)
-    scratch = tempfile.mkdtemp(prefix="pme_q91b_")
+    scratch = scratch_dir("pme_q91b_")
     for doc_id in _planted_ids(spark, sf_dir, 37):
         w, h = 16 + (doc_id % 9) * 4, 16 + (doc_id % 7) * 4
         with open(f"{scratch}/{doc_id}.png", "wb") as fh:

@@ -188,18 +188,24 @@ def worst_straggler(
 
 
 def cumulative_shuffle_bytes(spark) -> tuple[int, int]:
-    """(shuffle_write_bytes, shuffle_read_bytes) summed over every stage
-    the app status store retains — snapshot before/after a query and the
-    delta is that query's total shuffle volume.
+    """(shuffle_write_bytes, shuffle_read_bytes) summed over every
+    executor the app status store knows, dead ones included — snapshot
+    before/after a query and the delta is that query's total shuffle
+    volume.
 
-    Reads the JVM AppStatusStore directly (the same source as the UI's
-    stage table), so it measures REAL shuffle bytes, not plan-shape
-    proxies. Callers that diff snapshots across many queries should
-    raise ``spark.ui.retainedStages`` so eviction between snapshots
-    cannot shrink the cumulative sums (the scale experiment sets 20000).
-    """
+    Reads the JVM AppStatusStore's executor summaries (the same source
+    as the UI's executor table), so it measures REAL shuffle bytes, not
+    plan-shape proxies. Executor totals only grow, so a snapshot diff
+    never goes negative; a sum over the retained stage list shrinks
+    whenever the store evicts old stages past ``spark.ui.retainedStages``
+    (measured: with 20 retained stages a groupBy's diff read 0 or
+    -1.8 MB). Only executors dropped past
+    ``spark.ui.retainedDeadExecutors`` leave the sum."""
+    store = spark.sparkContext._jsc.sc().statusStore()
     written = read = 0
-    for st in _stage_list(spark):
-        written += st.shuffleWriteBytes()
-        read += st.shuffleReadBytes()
+    it = store.executorList(False).iterator()
+    while it.hasNext():
+        ex = it.next()
+        written += ex.totalShuffleWrite()
+        read += ex.totalShuffleRead()
     return written, read

@@ -118,7 +118,7 @@ DECISION_GLOBAL = r"LAST_[A-Z0-9_]*"
 #: memo in ``scratch.py`` (``session_fixture``), which keys on the
 #: session and records a directory only after its build succeeded.
 CACHE_GLOBAL = r"[A-Za-z0-9_]*_CACHE"
-CACHE_HOME = os.path.join("parquet_modular_encryption_spark", "scratch.py")
+SCRATCH_HOME = os.path.join("parquet_modular_encryption_spark", "scratch.py")
 
 
 def _scan_module_globals(src: str, pattern: str) -> list[int]:
@@ -149,7 +149,32 @@ def _scan_decision_globals(src: str) -> list[int]:
 def _scan_cache_globals(src: str, rel: str) -> list[int]:
     """Lines (1-based) of module-level ``*_CACHE`` assignments in any
     package module other than ``scratch.py``."""
-    return [] if rel == CACHE_HOME else _scan_module_globals(src, CACHE_GLOBAL)
+    return [] if rel == SCRATCH_HOME else _scan_module_globals(src, CACHE_GLOBAL)
+
+
+def _scan_mkdtemp(src: str, rel: str) -> list[int]:
+    """Lines (1-based) calling or importing ``tempfile.mkdtemp`` in any
+    package module other than ``scratch.py``. A bare mkdtemp directory
+    is never removed, so every run leaves one behind; ``scratch_dir``
+    puts it under the root removed at interpreter exit."""
+    import ast
+
+    if rel == SCRATCH_HOME:
+        return []
+    lines = []
+    for node in ast.walk(ast.parse(src)):
+        if (
+            isinstance(node, ast.Attribute)
+            and node.attr == "mkdtemp"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "tempfile"
+        ) or (
+            isinstance(node, ast.ImportFrom)
+            and node.module == "tempfile"
+            and any(a.name == "mkdtemp" for a in node.names)
+        ):
+            lines.append(node.lineno)
+    return sorted(lines)
 
 
 def scan_antipatterns() -> list[str]:
@@ -178,6 +203,11 @@ def scan_antipatterns() -> list[str]:
                 findings.append(
                     f"{rel}:{line}: module-level *_CACHE memo — build the "
                     "fixture through scratch.session_fixture instead."
+                )
+            for line in _scan_mkdtemp(src, rel):
+                findings.append(
+                    f"{rel}:{line}: tempfile.mkdtemp outside scratch.py — "
+                    "nothing removes it; use scratch.scratch_dir instead."
                 )
             for line in _scan_unreleased_pins(src):
                 findings.append(

@@ -31,6 +31,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+from dataclasses import replace
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -40,7 +41,8 @@ import pyarrow.parquet as pq  # noqa: E402
 
 from parquet_modular_encryption_spark.pipeline.similarity import (  # noqa: E402
     NEARDUP_COSINE,
-    q55_band_count,
+    Q55_LAYOUT,
+    Q55F_LAYOUT,
     q55_corpus_bands,
     q55_corpus_candidates,
     q55_extra_band_bits,
@@ -235,15 +237,14 @@ def run_planted(spark, result: dict) -> None:
         involved = sorted({v for a, b, _ in pairs for v in (a, b)})
         row: dict = {"n_vectors": n_total}
         for knob in knobs:
+            layout = replace(Q55_LAYOUT, per_doubling=knob)
             # None = the REGISTERED corpus-scaled band-count ladder
             # (r11); 2 = the historic fixed-2-band config whose recall
             # decay motivated it; 8 = the OR-amplification headroom.
             for n_bands in band_cfgs:
-                x = q55_extra_band_bits(n_total, per_doubling=knob)
-                resolved_bands = n_bands if n_bands is not None else q55_band_count(x)
-                _, bands = q55_corpus_bands(
-                    emb, per_doubling=knob, n_bands=n_bands
-                )
+                x = q55_extra_band_bits(n_total, layout)
+                resolved_bands = n_bands if n_bands is not None else layout.band_count(x)
+                _, bands = q55_corpus_bands(emb, layout, n_bands=n_bands)
                 n_cand = q55_corpus_candidates(bands).count()
                 keys: dict[int, dict[int, int]] = {}
                 for r in bands.filter(F.col("vec_id").isin(involved)).collect():
@@ -276,16 +277,10 @@ def run_planted(spark, result: dict) -> None:
                       flush=True)
         if want_wide:
             # r13: the q55f wide-base-band registered config — measured
-            # with the operator's own factored-out band stage, exactly
+            # with the operator's own band stage at Q55F_LAYOUT, exactly
             # like the knob configs above.
-            from parquet_modular_encryption_spark.pipeline.similarity import (
-                q55w_band_count,
-                q55w_corpus_bands,
-                q55w_extra_band_bits,
-            )
-
-            x = q55w_extra_band_bits(n_total)
-            _, wbands = q55w_corpus_bands(emb)
+            x = q55_extra_band_bits(n_total, Q55F_LAYOUT)
+            _, wbands = q55_corpus_bands(emb, Q55F_LAYOUT)
             n_cand = q55_corpus_candidates(wbands).count()
             keys = {}
             for r in wbands.filter(F.col("vec_id").isin(involved)).collect():
@@ -305,13 +300,13 @@ def run_planted(spark, result: dict) -> None:
                 }
             row["knob_wide_q55f"] = {
                 "extra_bits": x,
-                "n_bands": q55w_band_count(x),
+                "n_bands": Q55F_LAYOUT.band_count(x),
                 "registered_default": True,
                 "candidates": int(n_cand),
                 "recall_by_planted_cosine": strata,
             }
             print(f"planted {sf_name} WIDE q55f: n={n_total} x={x} "
-                  f"bands={q55w_band_count(x)} cand={n_cand} "
+                  f"bands={Q55F_LAYOUT.band_count(x)} cand={n_cand} "
                   f"{ {k: v['recall'] for k, v in strata.items()} }",
                   flush=True)
         result["planted"]["sfs"][sf_name] = row
@@ -387,8 +382,9 @@ def main() -> int:
         n = emb.count()
         row: dict = {"n_vectors": n, "exact_qualifying_pairs": int(len(pairs))}
         for knob in KNOBS:
-            x = q55_extra_band_bits(n, per_doubling=knob)
-            _, bands = q55_corpus_bands(emb, per_doubling=knob)
+            layout = replace(Q55_LAYOUT, per_doubling=knob)
+            x = q55_extra_band_bits(n, layout)
+            _, bands = q55_corpus_bands(emb, layout)
             n_cand = q55_corpus_candidates(bands).count()
             keys: dict[int, dict[int, int]] = {}
             for r in bands.collect():

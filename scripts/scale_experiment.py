@@ -135,6 +135,7 @@ def candidate_counts(spark, sf_dir: str, have: dict | None = None) -> dict:
         shingle_tf,
     )
     from parquet_modular_encryption_spark.pipeline.similarity import (
+        Q55_LAYOUT,
         q55_corpus_bands,
         q55_corpus_candidates,
     )
@@ -198,7 +199,7 @@ def candidate_counts(spark, sf_dir: str, have: dict | None = None) -> dict:
         # corpus-scaled band widening
         emb = load(spark, sf_dir, "embeddings")
         out["n_vectors"] = emb.count()
-        _, bands55 = q55_corpus_bands(emb)
+        _, bands55 = q55_corpus_bands(emb, Q55_LAYOUT)
         out["q55_band_candidates"] = q55_corpus_candidates(bands55).count()
     return out
 
@@ -408,8 +409,8 @@ def main() -> int:
         extra_conf = native_session_conf()
     except Exception as exc:  # noqa: BLE001
         print(f"# native PME jar unavailable: {exc}", file=sys.stderr)
-    # high stage retention so cumulative_shuffle_bytes snapshots never
-    # shrink from eviction between the before/after reads of one query
+    # high stage retention so the stage_task_dispersion straggler meter
+    # still sees every stage of one query after it finishes
     extra_conf["spark.ui.retainedStages"] = "20000"
     # zstd shuffle compression (the sf10 lesson): a long-lived session
     # retains every query's shuffle files until exit, and on this VM the

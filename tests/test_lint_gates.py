@@ -167,6 +167,33 @@ def test_cache_global_scanner_passes_scratch_memo():
     assert lint._scan_cache_globals(src, rel) == []
 
 
+# --------------------------------------------------- scratch directories
+
+
+def test_mkdtemp_scanner_fires_outside_scratch():
+    # q39's scratch line as it stood before scratch_dir: never removed
+    src = (
+        "import tempfile\n"
+        "def q39_csv_json_sources(spark, sf_dir):\n"
+        "    prep(spark)\n"
+        '    scratch = tempfile.mkdtemp(prefix="pme_q39_")\n'
+        "    note = 'tempfile.mkdtemp quoted in a string is no call'\n"
+    )
+    rel = os.path.join("parquet_modular_encryption_spark", "operators", "advanced.py")
+    assert lint._scan_mkdtemp(src, rel) == [4]
+    assert lint._scan_mkdtemp("from tempfile import mkdtemp\n", rel) == [1]
+    assert lint._scan_mkdtemp("import tempfile\nt = tempfile.mkstemp()\n", rel) == []
+
+
+def test_mkdtemp_scanner_passes_scratch_py():
+    rel = os.path.join("parquet_modular_encryption_spark", "scratch.py")
+    with open(os.path.join(REPO, rel)) as fh:
+        src = fh.read()
+    # scratch_dir is built on mkdtemp, and only its home module may call it
+    assert lint._scan_mkdtemp(src, "elsewhere.py") != []
+    assert lint._scan_mkdtemp(src, rel) == []
+
+
 # ------------------------------------------------------ package clean
 
 

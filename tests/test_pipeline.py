@@ -1041,25 +1041,37 @@ def test_semdedup_subcell_split_at_scale(spark, tmp_path):
     assert by_id == orows
 
 
-def test_embedding_neardup_band_widening_at_scale(spark, tmp_path):
-    """q55's corpus-scaled band widening (the r9 scale fix twin of
-    q55b's sub-cells): a corpus past Q55_BAND_TARGET forces x>=1 extra
-    band bits. The operator must still hash-match its DuckDB oracle
-    (same integer ladder both sides), and every planted EXACT duplicate
-    pair must still be found — identical vectors agree on every sign
-    plane, so widening can never lose them."""
+@pytest.mark.parametrize(
+    "query,layout_name,n_base",
+    [
+        ("q55_embedding_neardup", "Q55_LAYOUT", 1500),
+        ("q55e_embedding_neardup_budget", "Q55E_LAYOUT", 1600),
+        ("q55f_embedding_neardup_wide", "Q55F_LAYOUT", 8200),
+    ],
+    ids=["q55", "q55e", "q55f"],
+)
+def test_embedding_neardup_band_widening_at_scale(
+    spark, tmp_path, query, layout_name, n_base
+):
+    """The corpus-scaled band widening of every registered layout (the
+    r9 scale fix twin of q55b's sub-cells): a corpus past the layout's
+    target forces x>=1 extra band bits. The operator must still
+    hash-match its DuckDB oracle (same ladder both sides), and every
+    planted EXACT duplicate pair must still be found — identical vectors
+    agree on every sign plane, so widening can never lose them. q55f
+    needs > 16,384 vectors to leave its base rung (~6M bucket-join
+    candidates); 32 dimensions keep its verified output near 0.9M rows,
+    where 8 or 16 would return 11M or 4M."""
     import random
 
     import duckdb
 
-    from parquet_modular_encryption_spark.pipeline.similarity import (
-        q55_embedding_neardup,
-        q55_extra_band_bits,
-    )
+    from parquet_modular_encryption_spark.pipeline import similarity
     from parquet_modular_encryption_spark.registry import load_all
 
+    layout = getattr(similarity, layout_name)
     rng = random.Random(551)
-    n_base, dims, k = 1500, 32, 10
+    dims, k = 32, 10
     rows = []
     for i in range(n_base):
         vec = [rng.gauss(0.0, 1.0) for _ in range(dims)]
@@ -1070,11 +1082,11 @@ def test_embedding_neardup_band_widening_at_scale(spark, tmp_path):
         rows, "vec_id bigint, embedding array<float>, label int"
     ).coalesce(4).write.parquet(f"{sf}/embeddings.parquet")
 
-    assert q55_extra_band_bits(2 * n_base) >= 1
+    assert similarity.q55_extra_band_bits(2 * n_base, layout) >= 1
 
     got = {
         (r.vec_a, r.vec_b): round(r.cosine_sim, 9)
-        for r in q55_embedding_neardup(spark, sf).collect()
+        for r in load_all()[query].builder(spark, sf).collect()
     }
     for i in range(n_base):
         assert got.get((i, n_base + i)) == 1.0, f"lost exact-dup pair {i}"
@@ -1084,7 +1096,7 @@ def test_embedding_neardup_band_widening_at_scale(spark, tmp_path):
         f"CREATE VIEW embeddings AS SELECT * FROM "
         f"read_parquet('{sf}/embeddings.parquet/*.parquet')"
     )
-    oracle = load_all()["q55_embedding_neardup"].oracle
+    oracle = load_all()[query].oracle
     orows = {(r[0], r[1]): round(r[2], 9) for r in con.execute(oracle).fetchall()}
     assert got == orows
 
@@ -1104,6 +1116,7 @@ def test_band_widening_recall_at_planted_cosines(spark):
     import numpy as np
 
     from parquet_modular_encryption_spark.pipeline.similarity import (
+        Q55_LAYOUT,
         q55_corpus_bands,
         q55_extra_band_bits,
     )
@@ -1128,7 +1141,7 @@ def test_band_widening_recall_at_planted_cosines(spark):
         assert abs(realized - c) < 1e-6, (c, realized)
 
     n_total = n_base + len(partners)
-    x = q55_extra_band_bits(n_total)
+    x = q55_extra_band_bits(n_total, Q55_LAYOUT)
     assert x == 2, f"fixture no longer forces the widening under test: x={x}"
 
     emb = spark.createDataFrame(
@@ -1137,7 +1150,7 @@ def test_band_widening_recall_at_planted_cosines(spark):
     ).coalesce(8)
 
     def measure(n_bands=None):
-        _, bands = q55_corpus_bands(emb, n_bands=n_bands)
+        _, bands = q55_corpus_bands(emb, Q55_LAYOUT, n_bands=n_bands)
         keys: dict[int, dict[int, int]] = {}
         for r in bands.collect():
             keys.setdefault(r.vec_id, {})[r.band_id] = r.band_key
@@ -1197,14 +1210,14 @@ def test_band_widening_recall_at_planted_cosines(spark):
     # arithmetic and the floor; the candidate-mass payoff is asymptotic
     # and measured at scale in Q55_RECALL_r12.json, not here.
     from parquet_modular_encryption_spark.pipeline.similarity import (
-        Q55_BUDGET_PER_DOUBLING,
+        Q55E_LAYOUT,
     )
 
-    xb = q55_extra_band_bits(n_total, per_doubling=Q55_BUDGET_PER_DOUBLING)
+    xb = q55_extra_band_bits(n_total, Q55E_LAYOUT)
     assert xb == 3 and q55_band_count(xb) == 6, (xb, q55_band_count(xb))
 
     def measure_budget():
-        _, bands = q55_corpus_bands(emb, per_doubling=Q55_BUDGET_PER_DOUBLING)
+        _, bands = q55_corpus_bands(emb, Q55E_LAYOUT)
         keys: dict[int, dict[int, int]] = {}
         for r in bands.collect():
             keys.setdefault(r.vec_id, {})[r.band_id] = r.band_key
@@ -3525,15 +3538,18 @@ def test_q55_budget_ladder_engine_oracle_agree():
     to — sweep every regime boundary +-2 plus a dense range to pin the
     equivalence, for both the registered knobs."""
     import math
+    from dataclasses import replace
 
     from parquet_modular_encryption_spark.pipeline.similarity import (
         Q55_BAND_TARGET,
         Q55_BUDGET_PER_DOUBLING,
+        Q55_LAYOUT,
         Q55_MAX_EXTRA_BITS,
         q55_extra_band_bits,
     )
 
     for pd_knob in (1.0, Q55_BUDGET_PER_DOUBLING):
+        layout = replace(Q55_LAYOUT, per_doubling=pd_knob)
         thresholds = [
             int(math.floor(Q55_BAND_TARGET * 2.0 ** (x / pd_knob)))
             for x in range(Q55_MAX_EXTRA_BITS)
@@ -3550,10 +3566,62 @@ def test_q55_budget_ladder_engine_oracle_agree():
             probe.update(range(max(1, t - 2), t + 3))
         probe.update(int(thresholds[-1] * f) for f in (1.5, 2.0, 10.0))
         for n in sorted(probe):
-            assert q55_extra_band_bits(n, per_doubling=pd_knob) == sql_case(n), (
+            assert q55_extra_band_bits(n, layout) == sql_case(n), (
                 pd_knob,
                 n,
             )
+
+
+def test_semdedup_subbits_engine_oracle_agree():
+    """q55b's sub-cell ladder: the oracle's CASE is generated from
+    SEMDEDUP_TARGET_CELL / SEMDEDUP_MAX_SUBBITS, and DuckDB evaluating
+    it must pick exactly semdedup_subbits(n, k) at every rung threshold
+    +-2, for several codebook sizes, reaching every rung and the cap."""
+    import duckdb
+
+    from parquet_modular_encryption_spark.pipeline.similarity import (
+        SEMDEDUP_MAX_SUBBITS,
+        SEMDEDUP_TARGET_CELL,
+        _sql_semdedup_subbits,
+        semdedup_subbits,
+    )
+
+    probes = set()
+    for k in (1, 7, 64, 1000):
+        for b in range(SEMDEDUP_MAX_SUBBITS + 1):
+            t = k * SEMDEDUP_TARGET_CELL * (1 << b)
+            probes.update((n, k) for n in range(max(1, t - 2), t + 3))
+        probes.update(((1, k), (10**9, k)))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE p (n BIGINT, k BIGINT)")
+    con.executemany("INSERT INTO p VALUES (?, ?)", sorted(probes))
+    got = {
+        (n, k): b
+        for n, k, b in con.execute(
+            f"SELECT n, k, {_sql_semdedup_subbits()} AS b FROM p"
+        ).fetchall()
+    }
+    assert len(got) == len(probes)
+    for (n, k), b in sorted(got.items()):
+        assert b == semdedup_subbits(n, k), (n, k, b)
+    assert set(got.values()) == set(range(SEMDEDUP_MAX_SUBBITS + 1))
+
+
+def test_q55_plane_guard_rejects_band_25():
+    """The q55/q55e extra-band guard keeps its exact strictness: 24
+    bands are the most whose widening planes (N_PLANES + b*8 + j) stay
+    below the extra-band base range, so band 24 (n_bands = 25) must be
+    refused. The band builder asks for every band's base planes whatever
+    x is, so the guard holds at x = 0 too."""
+    from parquet_modular_encryption_spark.pipeline.similarity import (
+        Q55_LAYOUT,
+        Q55E_LAYOUT,
+    )
+
+    for layout in (Q55_LAYOUT, Q55E_LAYOUT):
+        assert len(layout.base_planes(23)) == 3
+        with pytest.raises(AssertionError, match="n_bands > 24"):
+            layout.base_planes(24)
 
 
 def test_q55_wide_ladders_and_plane_namespace():
@@ -3574,14 +3642,14 @@ def test_q55_wide_ladders_and_plane_namespace():
         Q55_EXTRA_BAND_PLANE_BASE,
         Q55_MAX_BANDS,
         Q55_MAX_EXTRA_BITS,
+        Q55F_LAYOUT,
         Q55W_BAND_TARGET,
         Q55W_BASE_BITS,
         Q55W_MAX_BANDS,
         Q55W_MAX_EXTRA_BITS,
         _q55_band_planes,
-        _q55w_plane,
+        q55_extra_band_bits,
         q55w_band_count,
-        q55w_extra_band_bits,
     )
 
     # (1) ladder agreement + scale coverage
@@ -3599,7 +3667,7 @@ def test_q55_wide_ladders_and_plane_namespace():
     probe.update(int(thresholds[-1] * f) for f in (1.5, 2.0, 10.0))
     probe.update((10**6, 16_000_000, 17_000_000))
     for n in sorted(probe):
-        assert q55w_extra_band_bits(n) == sql_case(n), n
+        assert q55_extra_band_bits(n, Q55F_LAYOUT) == sql_case(n), n
     # the cap binds only past ~16.8M vectors — 16x beyond the 10^6 target
     assert (Q55W_BAND_TARGET << Q55W_MAX_EXTRA_BITS) > 10**7
 
@@ -3626,11 +3694,11 @@ def test_q55_wide_ladders_and_plane_namespace():
     }  # extra-band bases up to the n_bands<=24 assert
     assert max(legacy) < Q55_EXTRA_BAND_PLANE_BASE + 24 * 16
     wide = {
-        _q55w_plane(b, i)
+        Q55F_LAYOUT.base_planes(b)[i]
         for b in range(Q55W_MAX_BANDS)
         for i in range(Q55W_BASE_BITS)
     } | {
-        _q55w_plane(b, j, widening=True)
+        Q55F_LAYOUT.widening_plane(b, j)
         for b in range(Q55W_MAX_BANDS)
         for j in range(Q55W_MAX_EXTRA_BITS)
     }
@@ -3643,7 +3711,7 @@ def test_q55_wide_planted_recall_pin(spark):
     """Deterministic planted-recall pin for the wide config (the q47
     337/360 pattern): 40 partners planted at EXACTLY cosine 0.95 (seeded
     Gram-Schmidt) plus 10 exact duplicates onto the sf0.001 corpus must
-    collide with their bases in >= 1 of q55w_corpus_bands' buckets at a
+    collide with their bases in >= 1 of Q55F_LAYOUT's band buckets at a
     rate matching the artifact-measured band-correlation gap (theory
     0.977 at x=0/B=5; Q55_RECALL_r13 measures 0.91-0.955 at real
     scales), and exact duplicates must NEVER be lost (they agree on
@@ -3652,9 +3720,10 @@ def test_q55_wide_planted_recall_pin(spark):
     import pyarrow.parquet as pq
 
     from parquet_modular_encryption_spark.pipeline.similarity import (
+        Q55F_LAYOUT,
+        q55_corpus_bands,
+        q55_extra_band_bits,
         q55w_band_count,
-        q55w_corpus_bands,
-        q55w_extra_band_bits,
     )
 
     t = pq.read_table(f"{SF}/embeddings.parquet", columns=["vec_id", "embedding"])
@@ -3684,9 +3753,9 @@ def test_q55_wide_planted_recall_pin(spark):
         next_id += 1
 
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    x = q55w_extra_band_bits(len(rows))
+    x = q55_extra_band_bits(len(rows), Q55F_LAYOUT)
     assert x == 0 and q55w_band_count(0) == 5  # tiny corpus: base rung
-    _, bands = q55w_corpus_bands(emb)
+    _, bands = q55_corpus_bands(emb, Q55F_LAYOUT)
     keys: dict[int, dict[int, int]] = {}
     involved = {v for p in planted + exact_dups for v in p}
     for r in bands.filter(F.col("vec_id").isin(list(involved))).collect():
@@ -4200,13 +4269,13 @@ def test_q55_band_keys_unchanged_by_literal_weights(spark):
     from parquet_modular_encryption_spark.sources.datasets import load
 
     emb = load(spark, SF, "embeddings")
-    _, bands_lit = S.q55_corpus_bands(emb)
+    _, bands_lit = S.q55_corpus_bands(emb, S.Q55_LAYOUT)
     got = {(r.vec_id, r.band_id, r.band_key) for r in bands_lit.collect()}
 
     # reference frame: the r14 per-row transform path, rebuilt verbatim
     e = emb.select("vec_id", S.as_double(F.col("embedding")).alias("ee"))
     n = emb.count()
-    x = S.q55_extra_band_bits(n)
+    x = S.q55_extra_band_bits(n, S.Q55_LAYOUT)
     n_bands = S.q55_band_count(x)
     dims = F.sequence(F.lit(0), F.size(F.col("ee")) - 1)
     bands_spec = [S._q55_band_planes(b) for b in range(n_bands)]
