@@ -27,6 +27,11 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from parquet_modular_encryption_spark.crypto import kms_core
 from parquet_modular_encryption_spark.crypto.policy import can_unwrap
 
+#: ``serve_forever`` poll interval. ``stop()`` waits for the next poll
+#: before it returns, and the stdlib default of 0.5 s made every stop
+#: block for about that long.
+POLL_INTERVAL_S = 0.05
+
 
 # OpenAPI 3 document for the wrap/unwrap surface — the stdlib stand-in
 # for the reference's FastAPI auto-generated docs (reference serves
@@ -275,7 +280,9 @@ class KmsServer:
             ctx = ssl.SSLContext(ssl.PROTOCOL_TLS_SERVER)
             ctx.load_cert_chain(certfile, keyfile)
             self._httpd.socket = ctx.wrap_socket(self._httpd.socket, server_side=True)
-        self._thread = threading.Thread(target=self._httpd.serve_forever, daemon=True)
+        self._thread = threading.Thread(
+            target=self._httpd.serve_forever, args=(POLL_INTERVAL_S,), daemon=True
+        )
 
     @property
     def url(self) -> str:

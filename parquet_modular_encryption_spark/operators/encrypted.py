@@ -190,6 +190,14 @@ def q60c_crypto_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
     point: erasing a data class costs one KMS delete, not a rewrite of
     the lake.
 
+    The negative half is the reference-shaped driver-side read
+    (``read_encrypted_arrow``): it goes through the same decrypting
+    format and KMS client, gets the same 410 and raises
+    ``KmsKeyShreddedError``, without a Spark job whose failing task would
+    take its Python worker down. The same failure on the distributed
+    reader is pinned by
+    tests/test_encryption.py::test_crypto_shred_fails_distributed_read.
+
     The shredded class is CONFIDENTIAL (not INTERNAL) deliberately: the
     Arrow scanner fetches the FIRST encrypted column's key (c_name,
     INTERNAL) on every multi-column read — the metadata over-fetch pinned
@@ -202,10 +210,12 @@ def q60c_crypto_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized inside the server's lifetime and returned as a bounded
     local frame, one row per market segment."""
     prep(spark)
+    from parquet_modular_encryption_spark.crypto.kms_client import KmsKeyShreddedError
     from parquet_modular_encryption_spark.crypto.kms_server import KmsServer
     from parquet_modular_encryption_spark.crypto.policy import CUSTOMER_POLICY
     from parquet_modular_encryption_spark.sources.encrypted import (
         read_encrypted,
+        read_encrypted_arrow,
         write_encrypted,
     )
 
@@ -220,13 +230,12 @@ def q60c_crypto_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
         # negative half: the shredded column must be unreadable even for
         # the most privileged token; anything else means erasure failed
         try:
-            read_encrypted(
-                spark, path, token="RESTRICTED",
+            read_encrypted_arrow(
+                path, token="RESTRICTED",
                 columns=["c_nationkey", "c_acctbal"], kms_url=server.url,
-            ).collect()
-        except Exception as exc:  # noqa: BLE001 — executor wraps the 410
-            if "shred" not in str(exc).lower() and "410" not in str(exc):
-                raise
+            )
+        except KmsKeyShreddedError:
+            pass
         else:
             raise RuntimeError(
                 "crypto-shred failed: CONFIDENTIAL column still readable"

@@ -11,6 +11,8 @@ so the same code is efficient on a real multi-executor cluster:
   Arrow instead of pickling rows.
 - Session timezone pinned to UTC: timestamp semantics must not depend on
   the host TZ, and the DuckDB oracle compares naive-UTC values.
+- Driver heap sized from the machine (:func:`default_driver_memory`)
+  unless ``SPARK_GRAFT_DRIVER_MEM`` is set.
 """
 
 from __future__ import annotations
@@ -22,6 +24,44 @@ from pyspark.sql import SparkSession
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+_MEMINFO = "/proc/meminfo"
+#: cgroup v2 and v1 memory-limit files; an unlimited group reads "max"
+#: (v2) or a value far above physical memory (v1).
+_CGROUP_MEMORY_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+_DRIVER_MEMORY_CAP = 16 << 30
+
+
+def default_driver_memory() -> str:
+    """Half of the memory this process may use, capped at 16g.
+
+    The usable memory is the smaller of ``MemTotal`` and the cgroup memory
+    limit. The other half is left to the Python workers, the OS page
+    cache and whatever else shares the machine; with the whole RAM as its
+    heap limit, one local JVM can starve its neighbours."""
+    limits = []
+    try:
+        with open(_MEMINFO) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    limits.append(int(line.split()[1]) * 1024)  # kB
+                    break
+    except OSError:
+        pass
+    for path in _CGROUP_MEMORY_LIMITS:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            limits.append(int(raw))
+    half = min(limits) // 2 if limits else _DRIVER_MEMORY_CAP
+    return f"{min(half, _DRIVER_MEMORY_CAP) >> 20}m"
 
 
 def get_spark(
@@ -39,7 +79,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # events.parquet carries TIMESTAMP(NANOS); read as BIGINT nanos

@@ -27,9 +27,11 @@ read_encrypted_parquet.py) as distributed Spark operators:
   (q60c's crypto-shred chooses its victim class accordingly).
 
 Scale design: parallelism is file-granular on read and partition-granular
-on write — the same sharding a 1000-executor cluster would use. The KMS
-sees one wrap/unwrap per file × key-id (double wrapping), so KMS load grows
-with file count, not data volume. An unauthorized projection fails the
+on write — the same sharding a 1000-executor cluster would use. A read
+runs min(files, default parallelism) tasks, with no exchange in front of
+the decrypting scan and no other cap. The KMS sees one
+wrap/unwrap per file × key-id (double wrapping), so KMS load grows with
+file count, not data volume. An unauthorized projection fails the
 task with ``KmsAuthorizationError`` — unauthorized queries fail, authorized
 narrower projections succeed (SURVEY.md §3 failure semantics).
 """
@@ -237,6 +239,11 @@ def read_encrypted(
     back to a driver-side decrypting schema read — one KMS unwrap of the
     footer key, still no data scanned.
 
+    The scan runs min(files, default parallelism) tasks with no exchange
+    before the ``mapInArrow``; a task decrypts its files one after
+    another. Spark has no size estimate for the result, so joins on it
+    are not planned as broadcasts.
+
     Every ``*.parquet`` file under ``path`` is read, in subdirectories too
     (the ``batch_id=N/`` directories of
     ``streaming/ingest.py::encrypted_stream_ingest`` become one scan).
@@ -280,10 +287,13 @@ def read_encrypted(
                     if rb.num_rows:
                         yield rb.cast(arrow_schema)
 
-    file_df = spark.createDataFrame([(f,) for f in files], "file string").repartition(
-        min(len(files), 64)
-    )
-    return file_df.mapInArrow(read_files, spark_schema)
+    # One slice per file up to the default parallelism, so no exchange is
+    # needed in front of the decrypting scan. Not a local relation: its
+    # size estimate counts one row per file, and every join on the
+    # decrypted lake would be planned as a broadcast of all of it.
+    sc = spark.sparkContext
+    file_rdd = sc.parallelize([(f,) for f in files], min(len(files), sc.defaultParallelism))
+    return spark.createDataFrame(file_rdd, "file string").mapInArrow(read_files, spark_schema)
 
 
 def _spark_schema_from_arrow(spark: SparkSession, arrow_schema: pa.Schema):

@@ -8,12 +8,12 @@ fails the calling pytest via returncode.
 from __future__ import annotations
 
 import sys
-import tempfile
 
 sys.path.insert(0, sys.argv[1])
 
 from parquet_modular_encryption_spark.crypto.kms_server import KmsServer
 from parquet_modular_encryption_spark.crypto.policy import CUSTOMER_POLICY
+from parquet_modular_encryption_spark.scratch import scratch_dir
 from parquet_modular_encryption_spark.session import get_spark
 from parquet_modular_encryption_spark.sources.encrypted import (
     read_encrypted,
@@ -38,7 +38,7 @@ def main() -> None:
         spark = get_spark("native-pme", cores=4, extra_conf=native_session_conf())
         plain = spark.read.parquet(f"{SF}/customer.parquet").coalesce(2)
         expected = sorted(map(tuple, plain.collect()))
-        scratch = tempfile.mkdtemp(prefix="pme_native_")
+        scratch = scratch_dir("pme_native_")
 
         # 1. native write → native read round-trip
         write_encrypted_native(plain, f"{scratch}/native", CUSTOMER_POLICY, kms_url)

@@ -179,15 +179,57 @@ def test_arrow_driver_side_reader_matches(spark, people_path):
 
 def test_multifile_distributed_roundtrip(spark, tmp_path):
     """Many partitions → many encrypted files → parallel decrypt preserves
-    every row (the 1000-executor sharding pattern at toy scale)."""
+    every row (the 1000-executor sharding pattern at toy scale). The scan
+    runs min(files, default parallelism) tasks with no exchange in front
+    of the decrypting ``mapInArrow``, and its size is not estimated from
+    the file list: a join on it is not planned as a broadcast."""
     path = str(tmp_path / "cust_enc")
-    cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet").repartition(7)
+    cust = spark.read.parquet("/root/testdata/sf0.001/customer.parquet").repartition(5)
     n_files = write_encrypted(cust, path, CUSTOMER_POLICY)
-    assert n_files == 7
+    assert n_files == 5
     back = read_encrypted(spark, path, token="RESTRICTED")
+    plan = back._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan and "Exchange" not in plan, plan
+    assert back.rdd.getNumPartitions() == min(5, spark.sparkContext.defaultParallelism)
+    join = back.join(back.select("c_custkey"), "c_custkey")
+    plan = join._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in plan, plan
     assert back.count() == 150
     plain = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, plain.collect()))
+
+
+def test_crypto_shred_fails_distributed_read(spark, tmp_path):
+    """After ``shred("CONFIDENTIAL")`` the distributed reader fails on the
+    shredded column even with a RESTRICTED token (the executor task gets
+    the KMS's 410), and a projection that avoids the shredded key id
+    still aggregates to the plaintext counts. q60c's builder proves the
+    same erasure with the driver-side reader."""
+    from parquet_modular_encryption_spark.crypto.kms_server import KmsServer
+
+    plain = spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
+    want = {r[0]: r[1] for r in plain.groupBy("c_mktsegment").count().collect()}
+    path = str(tmp_path / "cust_enc")
+    srv = KmsServer().start()
+    try:
+        write_encrypted(plain.coalesce(2), path, CUSTOMER_POLICY, kms_url=srv.url)
+        srv.shred("CONFIDENTIAL")
+        with pytest.raises(Exception) as info:
+            read_encrypted(
+                spark, path, "RESTRICTED",
+                columns=["c_nationkey", "c_acctbal"], kms_url=srv.url,
+            ).collect()
+        msg = str(info.value)
+        assert "shred" in msg.lower() or "410" in msg, msg
+
+        survivors = read_encrypted(
+            spark, path, "RESTRICTED",
+            columns=["c_name", "c_mktsegment"], kms_url=srv.url,
+        )
+        got = {r[0]: r[1] for r in survivors.groupBy("c_mktsegment").count().collect()}
+    finally:
+        srv.stop()
+    assert got == want
 
 
 def test_partition_pruning_skips_kms_unwraps(spark, tmp_path):

@@ -255,6 +255,18 @@ def test_crypto_shred_wire_semantics():
         other.stop()
 
 
+def test_stop_returns_promptly():
+    """``stop()`` waits for the serving thread's next poll, so the poll
+    interval bounds every stop; at the stdlib's 0.5 s a start + stop pair
+    took about half a second."""
+    import time
+
+    t0 = time.perf_counter()
+    KmsServer().start().stop()
+    elapsed = time.perf_counter() - t0
+    assert elapsed < 0.25, f"start + stop took {elapsed:.3f} s"
+
+
 def test_master_key_rotation_versioned_unwrap():
     """Two-phase master-key rotation at the wire level: after
     KmsServer.rotate(key_id), blobs wrapped under the OLD version still
